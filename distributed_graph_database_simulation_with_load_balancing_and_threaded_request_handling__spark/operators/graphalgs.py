@@ -1243,9 +1243,7 @@ def four_clique_counts(
     ).select(F.col("vertex").cast("long").alias("vertex"), "cliques4")
 
 
-def _contract_selection(
-    sel: DataFrame, *, max_doublings: int = 40, probe_every: int = 1
-) -> DataFrame:
+def _contract_selection(sel: DataFrame, *, max_doublings: int = 40) -> DataFrame:
     """Merge-label table for one Borůvka round WITHOUT a nested hash-min
     CC run: the selection relation ``(c, k.oc)`` is FUNCTIONAL (exactly
     one best edge per component), and under a strict total edge order
@@ -1310,16 +1308,6 @@ def _contract_selection(
             .persist()
         )
         handles.append(p)
-        # ``probe_every`` chains that many squarings between probe
-        # actions (squaring a fixpointed pointer table is a no-op, so
-        # any chaining factor returns identical labels).  Default 1:
-        # the r13 same-boot A/B measured chaining at 2 as a REGRESSION
-        # (q_msf 8.4 -> 10.3 s) — within a chain the second squaring
-        # plans against the first's un-materialized InMemoryRelation
-        # (child-plan stats, squared sizeInBytes), so the saved probe
-        # action costs more than it returns here, unlike the
-        # frontier-shaped sssp/CC loops.
-        probe = max(1, int(probe_every))
         for i in range(max_doublings):
             q_ = p.select(F.col("c").alias("qc"), F.col("p").alias("qp"))
             squared = (
@@ -1333,11 +1321,8 @@ def _contract_selection(
             )
             handles.append(squared)
             p = squared.drop("_chg")
-            if (i + 1) % probe != 0 and i < max_doublings - 1:
-                continue  # chain more squarings before the probe action
-            # The probe action ALSO materializes the chained rounds'
-            # caches (and, on round 0, the cycle-break frame) — the
-            # CC/sssp one-action-per-chain idiom.
+            # The probe action ALSO materializes the round's cache (and,
+            # on round 0, the cycle-break frame).
             n_changed = squared.agg(F.sum("_chg")).collect()[0][0] or 0
             if n_changed == 0:
                 # Accumulates across the Borůvka rounds of one

@@ -23,9 +23,11 @@ engine returns only reached vertices.
 Scale posture (100 TB): the frontier join shuffles on the vertex key;
 AQE right-sizes each level (frontiers vary by orders of magnitude).
 ``localCheckpoint`` truncates lineage each level so plans stay O(1)
-deep instead of O(depth); the lazy-checkpoint-then-count idiom makes
-each superstep exactly ONE Spark action (the count materializes the
-checkpoint AND detects the empty frontier — no separate isEmpty probe).
+deep instead of O(depth); the lazy-checkpoint-then-count idiom gives
+each superstep one probe action (the count materializes the checkpoint
+AND detects the empty frontier — no separate isEmpty probe).  AQE
+splits that action into several Spark jobs, one per query stage:
+measured about 40 jobs for 6 supersteps at 5e4 edge rows.
 Visited-set dedup: with ``undirected=True`` (the engine's canonical
 edge lists are symmetric, sources/graphs.py ``edges_from_pairs``) a
 neighbor of a level-L vertex can only sit at level L-1, L, or L+1, so
@@ -53,13 +55,100 @@ def _edges_only(edges: DataFrame, graph_id: int | None) -> DataFrame:
         e = e.where(F.col("graph_id") == graph_id)  # partition-prunable predicate
     return e.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
 
+def _frontier_loop(
+    e: DataFrame,
+    frontier: DataFrame,
+    keys: list[str],
+    *,
+    undirected: bool,
+    probe_every: int,
+    shuffle_hash: bool = False,
+) -> tuple[DataFrame, int]:
+    """The level-synchronous superstep loop shared by ``bfs_levels``
+    and ``bfs_levels_multi``: expand ``frontier`` (columns ``*keys,
+    vertex, level``, level 0, materialized) over ``e`` (``src, dst``
+    plus any of ``keys``) until a level comes back empty.  ``keys``
+    separates traversals: ``[]`` for one, ``[graph_id, start]`` for
+    many; only the keys ``e`` also carries join the expansion.
+
+    Returns the union of every reached level and the superstep count
+    (non-empty expansion rounds + the final empty probe round).
+
+    ``probe_every`` chains that many levels between probe actions;
+    every chained level keeps its lazy localCheckpoint, so nothing
+    re-executes combinatorially and only the probe ACTION is amortized.
+    A frontier can never be empty then non-empty, so a non-empty chain
+    tail proves every chained level non-empty, and a zero tail is
+    resolved by recounting the chain's already-materialized frames.
+    ``shuffle_hash`` hints the expansion join SHUFFLE_HASH (for an edge
+    side already partitioned on its join keys)."""
+    cols = [*keys, "vertex"]
+    join_keys = [k for k in keys if k in e.columns]
+    visited_levels = [frontier]
+    # Directed mode only: running union of all frontier keys seen.
+    seen_keys = frontier.select(*cols)
+    prev_keys: DataFrame | None = None
+    level = 0
+    probe = max(1, int(probe_every))
+    pending: list[DataFrame] = []
+    while True:
+        level += 1
+        # Superstep: expand frontier one hop, drop already-visited.
+        flhs = frontier.hint("shuffle_hash") if shuffle_hash else frontier
+        neighbors = (
+            flhs.join(e, [flhs[k] == e[k] for k in join_keys] + [flhs["vertex"] == e["src"]])
+            .select(*[flhs[k] for k in keys], e["dst"].alias("vertex"))
+            .distinct()
+        )
+        if undirected:
+            dedup = frontier.select(*cols)
+            if prev_keys is not None:
+                dedup = dedup.unionAll(prev_keys)
+        else:
+            dedup = seen_keys
+        # Lazy checkpoint; the chain's probe count is the ONE action
+        # that materializes every chained level in sequence (truncating
+        # lineage, giving AQE exact stats for the next join) and
+        # detects the empty frontier.
+        new = (
+            neighbors.join(dedup, on=cols, how="left_anti")
+            .select(*cols, F.lit(level).cast("int").alias("level"))
+            .localCheckpoint(eager=False)
+        )
+        pending.append(new)
+        prev_keys = frontier.select(*cols)
+        if not undirected:
+            # Incrementally-checkpointed running visited set: ONE union
+            # + lazy localCheckpoint per level.  Within a probe chain the
+            # checkpoints stay unmaterialized until the probe action, so
+            # the anti-join build side is an O(probe_every) union tree —
+            # flat again after each probe, never O(depth).
+            seen_keys = seen_keys.unionAll(new.select(*cols)).localCheckpoint(eager=False)
+        frontier = new
+        if len(pending) < probe:
+            continue  # chain more levels before the probe action
+        if pending[-1].count() > 0:
+            visited_levels.extend(pending)
+            pending = []
+            continue
+        # Zero tail: keep the non-empty prefix (recounts read the
+        # chain's already-materialized checkpoint blocks).
+        for df in pending[:-1]:
+            if df.count() == 0:
+                break
+            visited_levels.append(df)
+        break
+    out = visited_levels[0]
+    for v in visited_levels[1:]:
+        out = out.unionAll(v)
+    return out, len(visited_levels)
+
+
 def bfs_levels(
     edges: DataFrame,
     start_vertex: int,
     *,
     graph_id: int | None = None,
-    max_levels: int | None = None,
-    validate_start: bool = True,
     undirected: bool = True,
     include_unreached: bool = False,
     probe_every: int = 1,
@@ -80,10 +169,10 @@ def bfs_levels(
     rendering of the reference's per-level thread fan-out + join
     barrier (secondary_server.c:110-132).
 
-    ``validate_start`` raises for a start vertex absent from the graph
-    (FIXTURES.md: the reference indexes row -1 on out-of-range input,
-    e.g. inp.txt:36-39 start=0; the engine raises instead).  The check
-    is one src-pushdown filter probe; disable inside tight loops.
+    Raises for a start vertex absent from the graph (FIXTURES.md: the
+    reference indexes row -1 on out-of-range input, e.g. inp.txt:36-39
+    start=0; the engine raises instead).  The check is one
+    src-pushdown filter probe.
 
     ``undirected`` (default True, matching the engine's canonical
     symmetric edge lists and the reference's symmetric adjacency
@@ -94,12 +183,7 @@ def bfs_levels(
     must be retained.
 
     ``probe_every`` chains that many expansion levels between
-    convergence-probe actions (the sssp/betweenness contract: every
-    chained level keeps its lazy localCheckpoint, so nothing re-executes
-    combinatorially — only the probe ACTION is amortized).  A frontier
-    can never be empty then non-empty, so a non-empty chain tail proves
-    every chained level non-empty, and a zero tail is resolved by
-    recounting the chain's already-materialized frames.  Identical
+    convergence-probe actions (see ``_frontier_loop``).  Identical
     result for any chaining factor; worth it on DEEP traversals where
     the per-action scheduling floor dominates (shallow dispatch BFS
     measured a regression from chaining — leave 1 there).
@@ -113,87 +197,20 @@ def bfs_levels(
     # 100 TB graph partition spills instead of OOMing.
     e = _edges_only(edges, graph_id).persist()
     try:
-        if validate_start and e.where(F.col("src") == int(start_vertex)).limit(1).isEmpty():
+        if e.where(F.col("src") == int(start_vertex)).limit(1).isEmpty():
             raise ValueError(
                 f"start vertex {start_vertex} not present in graph"
                 + (f" {graph_id}" if graph_id is not None else "")
             )
-
         frontier = spark.createDataFrame([(int(start_vertex), 0)], "vertex long, level int")
-        frontier = frontier.localCheckpoint(eager=True)
-        visited_levels = [frontier]
-        # Directed mode only: running union of all frontier keys seen.
-        seen_keys = frontier.select("vertex")
-        prev_keys: DataFrame | None = None
-        level = 0
-        probe = max(1, int(probe_every))
-        pending: list[DataFrame] = []
-        done = False
-        while not done:
-            level += 1
-            at_level_cap = max_levels is not None and level > max_levels
-            if not at_level_cap:
-                # Superstep: expand frontier one hop, drop already-visited.
-                neighbors = (
-                    frontier.join(e, frontier["vertex"] == e["src"])
-                    .select(e["dst"].alias("vertex"))
-                    .distinct()
-                )
-                if undirected:
-                    dedup = frontier.select("vertex")
-                    if prev_keys is not None:
-                        dedup = dedup.unionAll(prev_keys)
-                else:
-                    dedup = seen_keys
-                new = (
-                    neighbors.join(dedup, on="vertex", how="left_anti")
-                    .select(F.col("vertex"), F.lit(level).cast("int").alias("level"))
-                )
-                # Lazy checkpoint; the chain's probe count is the ONE
-                # action that materializes every chained level in
-                # sequence (truncating lineage, giving AQE exact stats
-                # for the next join) and detects the empty frontier.
-                new = new.localCheckpoint(eager=False)
-                pending.append(new)
-                prev_keys = frontier.select("vertex")
-                if not undirected:
-                    # Incrementally-checkpointed running visited set: ONE
-                    # union + lazy localCheckpoint per level.  With
-                    # probe_every > 1 the checkpoints within a chain stay
-                    # unmaterialized until the probe action, so the
-                    # anti-join build side is an O(probe_every) union
-                    # tree within a chain — flat again after each probe.
-                    # Bounded by the chaining factor (keep probe_every
-                    # small for directed traversals), never the O(depth)
-                    # union tree of the pre-checkpoint form.
-                    seen_keys = seen_keys.unionAll(
-                        new.select("vertex")
-                    ).localCheckpoint(eager=False)
-                frontier = new
-                if len(pending) < probe:
-                    continue  # chain more levels before the probe action
-                if pending[-1].count() > 0:
-                    # Empty-then-non-empty is impossible, so a non-empty
-                    # tail proves every chained level non-empty.
-                    visited_levels.extend(pending)
-                    pending = []
-                    continue
-                pending = pending[:-1]  # tail known empty; trim the rest
-            # Zero tail (or the level cap): keep the non-empty prefix —
-            # these recounts read already-materialized checkpoint blocks.
-            for df in pending:
-                if df.count() == 0:
-                    break
-                visited_levels.append(df)
-            pending = []
-            done = True
-
-        # Same metric semantics as the unchained loop: non-empty
-        # expansion rounds + the final empty probe round.
-        LOOP_STATS["bfs_levels"] = {"supersteps": len(visited_levels)}
-        out = visited_levels[0]
-        for v in visited_levels[1:]:
-            out = out.unionAll(v)
+        out, supersteps = _frontier_loop(
+            e,
+            frontier.localCheckpoint(eager=True),
+            [],
+            undirected=undirected,
+            probe_every=probe_every,
+        )
+        LOOP_STATS["bfs_levels"] = {"supersteps": supersteps}
         if include_unreached:
             # Symmetric edge list: the src side alone covers every vertex.
             all_vertices = e.select(F.col("src").alias("vertex")).distinct()
@@ -220,18 +237,19 @@ def bfs_levels_multi(
     (graph_id, start, vertex, level) for every reached vertex of every
     traversal.  Starts absent from their graph yield no rows (the
     reference reads out-of-bounds memory there; callers wanting a hard
-    error use single-source ``bfs_levels``'s validate_start).
+    error use single-source ``bfs_levels``).
 
     Scale: the frontier is keyed (graph_id, start, vertex) so distinct
     traversals never interfere; the edge join shuffles on
     (graph_id, src) — co-partitioned with a graph_id-bucketed edge
     table; supersteps = the deepest requested traversal, not the sum.
-    One Spark action per superstep (lazy checkpoint + count) — or per
-    CHAIN of ``probe_every`` supersteps (the ``bfs_levels`` chaining
-    contract: identical result, probe action amortized; use on deep
-    traversals) — and, with ``undirected`` (default — canonical edge
-    lists are symmetric), last-two-frontiers dedup per traversal (see
-    ``bfs_levels``).
+    One probe action per superstep (lazy checkpoint + count), which AQE
+    splits into several Spark jobs — measured about 40 jobs for 6
+    supersteps at 5e4 edge rows — or one per CHAIN of ``probe_every``
+    supersteps (the ``bfs_levels`` chaining contract: identical result,
+    probe action amortized; use on deep traversals) — and, with
+    ``undirected`` (default — canonical edge lists are symmetric),
+    last-two-frontiers dedup per traversal (see ``bfs_levels``).
     """
     spark = edges.sparkSession
     # ``co_partition`` (r13, guide §2.4 — the betweenness_sampled /
@@ -267,73 +285,15 @@ def bfs_levels_multi(
                     F.lit(0).cast("int").alias("level"))
             .localCheckpoint(eager=True)
         )
-        visited_levels = [frontier]
-        keys = ["graph_id", "start", "vertex"]
-        seen_keys = frontier.select(*keys)
-        prev_keys: DataFrame | None = None
-        level = 0
-        probe = max(1, int(probe_every))
-        pending: list[DataFrame] = []
-        done = False
-        while not done:
-            level += 1
-            flhs = frontier.hint("shuffle_hash") if co_partition else frontier
-            neighbors = (
-                flhs.join(
-                    e,
-                    on=[
-                        flhs["graph_id"] == e["graph_id"],
-                        flhs["vertex"] == e["src"],
-                    ],
-                )
-                .select(
-                    flhs["graph_id"], flhs["start"], e["dst"].alias("vertex")
-                )
-                .distinct()
-            )
-            if undirected:
-                dedup = frontier.select(*keys)
-                if prev_keys is not None:
-                    dedup = dedup.unionAll(prev_keys)
-            else:
-                dedup = seen_keys
-            new = (
-                neighbors.join(dedup, on=keys, how="left_anti")
-                .select("graph_id", "start", "vertex",
-                        F.lit(level).cast("int").alias("level"))
-                .localCheckpoint(eager=False)
-            )
-            pending.append(new)
-            prev_keys = frontier.select(*keys)
-            if not undirected:
-                # Same incremental-checkpoint posture as bfs_levels:
-                # O(1) unions per level, flat materialized build side.
-                seen_keys = seen_keys.unionAll(
-                    new.select(*keys)
-                ).localCheckpoint(eager=False)
-            frontier = new
-            if len(pending) < probe:
-                continue  # chain more levels before the probe action
-            if pending[-1].count() > 0:
-                # Empty-then-non-empty is impossible, so a non-empty
-                # tail proves every chained level non-empty.
-                visited_levels.extend(pending)
-                pending = []
-                continue
-            # Zero tail: keep the non-empty prefix (recounts read the
-            # chain's already-materialized checkpoint blocks).
-            for df in pending[:-1]:
-                if df.count() == 0:
-                    break
-                visited_levels.append(df)
-            pending = []
-            done = True
-        # Same metric semantics as the unchained loop: non-empty
-        # expansion rounds + the final empty probe round.
-        LOOP_STATS["bfs_levels_multi"] = {"supersteps": len(visited_levels)}
-        out = visited_levels[0]
-        for v in visited_levels[1:]:
-            out = out.unionAll(v)
+        out, supersteps = _frontier_loop(
+            e,
+            frontier,
+            ["graph_id", "start"],
+            undirected=undirected,
+            probe_every=probe_every,
+            shuffle_hash=co_partition,
+        )
+        LOOP_STATS["bfs_levels_multi"] = {"supersteps": supersteps}
         return out
     finally:
         e.unpersist(blocking=False)
@@ -378,14 +338,13 @@ def dfs_leaves_multi_general(edges: DataFrame, sources: DataFrame) -> DataFrame:
     (graph_id, start) traversal at once with ``bfs_levels_multi``,
     then a reached vertex is a leaf iff it has no neighbor one level
     deeper in ITS traversal (i.e. no children in that BFS tree) and is
-    not the start — the same child-detection join the single-source
-    general path uses, generalized per (graph_id, start).
+    not the start.
 
     This is the set-oriented replacement for the former per-request
     driver loop in ``dispatch.run_requests`` (one plan, two iterative
-    jobs total, for ANY request count); per request it agrees with
-    ``dfs_leaves(..., assume_tree=False)``.  Starts absent from their
-    graph yield no rows (multi-request contract).  Returns
+    jobs total, for ANY request count); ``dfs_leaves(...,
+    assume_tree=False)`` is a one-source call of it.  Starts absent
+    from their graph yield no rows (multi-request contract).  Returns
     (graph_id, start, leaf).
     """
     e = edges.select(
@@ -557,22 +516,11 @@ def dfs_leaves(
             deg.where((F.col("degree") == 1) & (F.col("src") != int(start_vertex)))
             .select(F.col("src").alias("leaf"))
         )
-    levels = bfs_levels(edges, start_vertex, graph_id=graph_id, validate_start=False)
-    # v has a child iff some neighbor sits one level deeper.
-    nbr_levels = (
-        e.join(levels.withColumnRenamed("vertex", "dst").withColumnRenamed("level", "dst_level"), on="dst")
-        .join(levels.withColumnRenamed("vertex", "src").withColumnRenamed("level", "src_level"), on="src")
-    )
-    parents = (
-        nbr_levels.where(F.col("dst_level") == F.col("src_level") + 1)
-        .select(F.col("src").alias("vertex"))
-        .distinct()
-    )
-    return (
-        levels.join(parents, on="vertex", how="left_anti")
-        .where(F.col("vertex") != int(start_vertex))
-        .select(F.col("vertex").alias("leaf"))
-    )
+    # One-source call of the batched general path (graph_id 0 over the
+    # already-filtered edges); it returns no rows for an absent start,
+    # which the check above turns into the error.
+    src = e.sparkSession.createDataFrame([(0, int(start_vertex))], "graph_id int, start long")
+    return dfs_leaves_multi_general(e.select(F.lit(0).alias("graph_id"), "src", "dst"), src).select("leaf")
 
 def connected_components(
     edges: DataFrame,

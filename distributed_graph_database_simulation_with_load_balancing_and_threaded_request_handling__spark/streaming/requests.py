@@ -96,7 +96,9 @@ def run_request_stream(
     ``awaitTermination()``."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        cycle = schedule_requests(batch_df.select(*[f.name for f in REQUESTS_SCHEMA.fields]))
+        # Keep every request column but the arrival time: a graph_id
+        # column, when present, is what keys each request to its graph.
+        cycle = schedule_requests(batch_df.drop("event_time"))
         results = run_requests(cycle.drop("service_order"), edges)
         sink(results, batch_id)
 
@@ -166,10 +168,11 @@ def serve_requests_available_now(
         results.write.mode("append").parquet(out_dir)
 
     ckpt_dir = os.path.join(base, "ckpt")
+    # Read the queue back with the staged frame's own schema, so
+    # columns beyond REQUEST_STREAM_SCHEMA (graph_id) reach dispatch.
+    queue = spark.readStream.schema(staged.schema).option("maxFilesPerTrigger", 1).parquet(in_dir)
     q = run_request_stream(
-        read_request_stream(
-            spark, in_dir, fmt="parquet", max_files_per_trigger=1
-        ),
+        queue,
         edges,
         sink,
         checkpoint_dir=ckpt_dir,

@@ -130,26 +130,42 @@ def test_serve_requests_available_now_equals_batch(spark):
         serve_requests_available_now,
     )
 
-    edges = make_edges(spark, SIO_G1)
-    reqs = spark.createDataFrame(
+    sio = make_edges(spark, SIO_G1)
+    sio_reqs = spark.createDataFrame(
         [(1, 3, "G1.txt", 1), (2, 4, "G1.txt", 1), (3, 4, "G1.txt", 2),
          (4, 3, "G1.txt", 2), (5, 4, "G1.txt", 5)],
         "seq_no int, op_no int, graph_name string, start_vertex int",
     )
-    for n_cycles in (1, 3):
-        served = serve_requests_available_now(spark, reqs, edges, n_cycles=n_cycles)
-        got = {
-            (r["seq_no"], r["vertex"], r["level"]) for r in served.collect()
-        }
-        want = {
-            (r["seq_no"], r["vertex"], r["level"])
-            for r in run_requests(reqs, edges).collect()
-        }
-        assert got == want
-    replies = {r["seq_no"]: r["reply"] for r in format_reply(served).collect()}
-    # Sample-IO G1 golden outputs: DFS(1) -> 3 5; BFS(1) level order.
-    assert replies[1] == "3 5"
-    assert replies[2] == "1 2 3 4 5"
+    # Two graphs in one edge table, requests keyed by graph_id: G1 =
+    # path 1-2-3, G2 = star at 1.  Each reply reads its own graph only
+    # (BFS of G1 from 1 is "1 2 3", not the union's "1 2 3 4").
+    two = make_edges(spark, [(1, 2), (2, 3)], graph_id=1).unionByName(
+        make_edges(spark, [(1, 2), (1, 3), (1, 4)], graph_id=2)
+    )
+    two_reqs = spark.createDataFrame(
+        [(1, 4, "G1.txt", 1, 1), (2, 3, "G1.txt", 1, 1),
+         (3, 4, "G2.txt", 2, 2), (4, 3, "G2.txt", 1, 2)],
+        "seq_no int, op_no int, graph_name string, start_vertex int, graph_id int",
+    )
+    cases = [
+        # Sample-IO G1 golden outputs: DFS(1) -> 3 5; BFS(1) level order.
+        (sio, sio_reqs, {1: "3 5", 2: "1 2 3 4 5"}),
+        (two, two_reqs, {1: "1 2 3", 2: "3", 3: "2 1 3 4", 4: "2 3 4"}),
+    ]
+    for edges, reqs, golden in cases:
+        for n_cycles in (1, 3):
+            served = serve_requests_available_now(spark, reqs, edges, n_cycles=n_cycles)
+            got = {
+                (r["seq_no"], r["vertex"], r["level"]) for r in served.collect()
+            }
+            want = {
+                (r["seq_no"], r["vertex"], r["level"])
+                for r in run_requests(reqs, edges).collect()
+            }
+            assert got == want
+        replies = {r["seq_no"]: r["reply"] for r in format_reply(served).collect()}
+        for seq, reply in golden.items():
+            assert replies[seq] == reply
 
 
 def test_running_route_totals_stateful(spark, request_dir):

@@ -90,6 +90,8 @@ def test_absent_start_vertex_raises(spark):
         bfs_levels(edges, 42, graph_id=1)
     with pytest.raises(ValueError, match="not present"):
         dfs_leaves(edges, 42, graph_id=1)
+    with pytest.raises(ValueError, match="not present"):
+        dfs_leaves(edges, 42, graph_id=1, assume_tree=False)
 
 def test_bfs_levels_directed_mode_handles_back_edges(spark):
     # Directed path 1->2->3->4->5 plus a back-jump 5->1: the
