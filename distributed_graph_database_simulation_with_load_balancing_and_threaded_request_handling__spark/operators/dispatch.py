@@ -16,6 +16,8 @@ for the service order.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -117,6 +119,15 @@ def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = T
     out-of-bounds memory there, SURVEY.md §2.1; single-source
     ``bfs_levels`` offers the hard-error variant).
 
+    The batch is read by ONE action before any operator runs: it
+    materializes the projected read requests into a lazy local
+    checkpoint, so no later job re-runs the caller's request plan (a
+    scheduling window, a Python-built frame), and returns the op kinds
+    present.  Only the branches those kinds need are built: a DFS-only
+    batch runs no BFS superstep, a BFS-only batch no degree
+    aggregation, and a batch without read requests returns the five
+    columns with no rows.
+
     Without a ``graph_id`` request column the whole edge set is
     treated as one graph (the output's graph_id is NULL), matching the
     name-keyed request shape of the reference client.
@@ -135,12 +146,19 @@ def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = T
         req_gid = F.lit(0)
         out_gid = F.lit(None).cast("int")
 
-    reads = requests.where(F.col("op_no").isin(3, 4)).select(
-        F.col("seq_no").cast("int").alias("seq_no"),
-        F.col("op_no").cast("int").alias("op_no"),
-        req_gid.alias("graph_id"),
-        F.col("start_vertex").cast("long").alias("start"),
+    reads = (
+        requests.where(F.col("op_no").isin(3, 4))
+        .select(
+            F.col("seq_no").cast("int").alias("seq_no"),
+            F.col("op_no").cast("int").alias("op_no"),
+            req_gid.alias("graph_id"),
+            F.col("start_vertex").cast("long").alias("start"),
+        )
+        .localCheckpoint(eager=False)
     )
+    # The batch's one read action: materializes the checkpoint and
+    # names the branches to build.
+    kinds = {r["op_no"] for r in reads.select("op_no").distinct().collect()}
 
     # The requests side of each fan-out join is CONTROL-PLANE sized
     # (bounded by client count — the reference's msgq depth), while the
@@ -149,33 +167,50 @@ def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = T
     # 2 SortMergeJoin, 4 Exchange), i.e. the BFS/leaf output was
     # shuffled by (graph_id, start) just to be stamped with seq_nos.
     # Broadcasting the requests makes the stamp exchange-free.
-    op4 = reads.where(F.col("op_no") == 4)
-    bfs = bfs_levels_multi(e, op4.select("graph_id", "start"))
-    out4 = F.broadcast(op4).join(bfs, on=["graph_id", "start"]).select(
-        "seq_no",
-        F.lit(4).alias("op_no"),
-        out_gid.alias("graph_id"),
-        "vertex",
-        "level",
-    )
+    outs = []
+    if 4 in kinds:
+        op4 = reads.where(F.col("op_no") == 4)
+        bfs = bfs_levels_multi(e, op4.select("graph_id", "start"))
+        outs.append(
+            F.broadcast(op4).join(bfs, on=["graph_id", "start"]).select(
+                "seq_no",
+                F.lit(4).alias("op_no"),
+                out_gid.alias("graph_id"),
+                "vertex",
+                "level",
+            )
+        )
 
-    op3 = reads.where(F.col("op_no") == 3)
-    if dfs_plan.rule == "R1":
-        leaves = dfs_leaves_multi(e, op3.select("graph_id", "start"))
-    else:
-        # General (non-tree) path: the same set-oriented shape — one
-        # multi-source BFS orientation + child-detection join for the
-        # whole batch (no per-request driver loop, no collect()).
-        leaves = dfs_leaves_multi_general(e, op3.select("graph_id", "start"))
-    out3 = F.broadcast(op3).join(leaves, on=["graph_id", "start"]).select(
-        "seq_no",
-        F.lit(3).alias("op_no"),
-        out_gid.alias("graph_id"),
-        F.col("leaf").alias("vertex"),
-        F.lit(None).cast("int").alias("level"),
-    )
+    if 3 in kinds:
+        op3 = reads.where(F.col("op_no") == 3)
+        if dfs_plan.rule == "R1":
+            leaves = dfs_leaves_multi(e, op3.select("graph_id", "start"))
+        else:
+            # General (non-tree) path: the same set-oriented shape — one
+            # multi-source BFS orientation + child-detection join for the
+            # whole batch (no per-request driver loop, no collect()).
+            leaves = dfs_leaves_multi_general(e, op3.select("graph_id", "start"))
+        outs.append(
+            F.broadcast(op3).join(leaves, on=["graph_id", "start"]).select(
+                "seq_no",
+                F.lit(3).alias("op_no"),
+                out_gid.alias("graph_id"),
+                F.col("leaf").alias("vertex"),
+                F.lit(None).cast("int").alias("level"),
+            )
+        )
 
-    return out4.unionByName(out3)
+    if not outs:
+        # No read request: ``reads`` is empty, so this is the empty
+        # five-column reply frame, typed like the branches above.
+        return reads.select(
+            "seq_no",
+            "op_no",
+            out_gid.alias("graph_id"),
+            F.col("start").alias("vertex"),
+            F.lit(None).cast("int").alias("level"),
+        )
+    return reduce(DataFrame.unionByName, outs)
 
 def format_reply(result: DataFrame) -> DataFrame:
     """O12 compat: space-joined vertex list per request in (level,

@@ -277,7 +277,7 @@ def bfs_levels_multi(
         # Keep only starts that exist in their graph (semi join).
         frontier = (
             src0.join(
-                e.select("graph_id", F.col("src").alias("start")).distinct(),
+                e.select("graph_id", F.col("src").alias("start")),
                 on=["graph_id", "start"],
                 how="left_semi",
             )
@@ -313,13 +313,16 @@ def dfs_leaves_multi(edges: DataFrame, sources: DataFrame) -> DataFrame:
     use this operator as-is — the broadcast would be collected to the
     driver and shipped whole to every executor."""
     e = edges.select("graph_id", "src", "dst")
-    deg = e.groupBy("graph_id", "src").agg(F.count_distinct("dst").alias("degree"))
+    # Degree 1 <=> every row of src names the same neighbor: one hash
+    # aggregation, where count_distinct plans a two-level distinct
+    # aggregation (one exchange more); equal on duplicated edge rows.
+    deg1 = e.groupBy("graph_id", "src").agg((F.min("dst") == F.max("dst")).alias("deg1"))
     src0 = sources.select(
         F.col("graph_id").cast("int").alias("graph_id"),
         F.col("start").cast("long").alias("start"),
     ).distinct()
     valid = src0.join(
-        deg.select("graph_id", F.col("src").alias("start")),
+        deg1.select("graph_id", F.col("src").alias("start")),
         on=["graph_id", "start"],
         how="left_semi",
     )
@@ -327,7 +330,7 @@ def dfs_leaves_multi(edges: DataFrame, sources: DataFrame) -> DataFrame:
     # — broadcast them so the degree table is never shuffled by
     # graph_id just to be fanned out per request.
     return (
-        F.broadcast(valid).join(deg.where(F.col("degree") == 1), on="graph_id")
+        F.broadcast(valid).join(deg1.where(F.col("deg1")), on="graph_id")
         .where(F.col("src") != F.col("start"))
         .select("graph_id", "start", F.col("src").alias("leaf"))
     )
@@ -558,8 +561,10 @@ def connected_components(
     doubling join when enabled); rounds ≈ diameter (or its log),
     labels are localCheckpointed so lineage stays flat.  Convergence
     is a ``_changed`` flag summed in the SAME action that materializes
-    the round's checkpoint — one Spark job per round, no separate
-    old-vs-new join probe.  ``probe_every`` chains that many rounds
+    the round's checkpoint — one probe action per round, no separate
+    old-vs-new join probe.  AQE splits that action into several Spark
+    jobs, one per query stage: measured 39 jobs for 6 rounds at 5e4
+    edge rows.  ``probe_every`` chains that many rounds
     between probes (the sssp contract: every chained round keeps its
     lazy localCheckpoint, only the probe ACTION is amortized; a round
     past the fixpoint is a no-op whose _changed sums to 0, so any

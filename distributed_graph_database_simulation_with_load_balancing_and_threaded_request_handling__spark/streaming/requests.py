@@ -133,8 +133,9 @@ def serve_requests_available_now(
     equivalence the declared ``q_stream_requests`` puts under the
     value oracle.
 
-    Scale posture: a cycle's work is one multi-source BFS + one degree
-    aggregation for ALL its requests (request-count-independent), and
+    Scale posture: a cycle's work is at most one multi-source BFS + one
+    degree aggregation for ALL its requests (request-count-independent;
+    a cycle builds only the branches its op kinds need), and
     the accumulated sink is an append-only parquet directory — the
     same "replies land in a results table" shape a long-running
     cluster deployment would use.
@@ -182,8 +183,6 @@ def serve_requests_available_now(
     # state are dead weight — remove them so repeated drives don't
     # accumulate working trees in /tmp.  The replies directory must
     # STAY: the returned DataFrame reads it lazily.
-    import shutil
-
     for dead in (in_dir, ckpt_dir):
         shutil.rmtree(dead, ignore_errors=True)
     return spark.read.parquet(out_dir)

@@ -102,10 +102,18 @@ def test_schedule_requests_bucketed_matches_global_no_single_partition_sort(spar
 
 def test_run_requests_and_reply(spark):
     edges = make_edges(spark, REF_G3, graph_id=3)
+    # Every evaluation of the request frame passes its rows through
+    # this Python UDF, so the accumulator counts how often it ran.
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        evals.add(1)
+        return v
+
     reqs = spark.createDataFrame(
         [(10, 3, 3, 3), (11, 4, 3, 2)],
         "seq_no int, op_no int, graph_id int, start_vertex int",
-    )
+    ).withColumn("start_vertex", F.udf(counted, "int")("start_vertex"))
     out = run_requests(reqs, edges)
     dfs_rows = {r["vertex"] for r in out.where(F.col("seq_no") == 10).collect()}
     assert dfs_rows == {1, 4, 5}  # inp.txt:32-35 request: DFS G3 from 3
@@ -114,6 +122,32 @@ def test_run_requests_and_reply(spark):
     replies = {r["seq_no"]: r["reply"] for r in format_reply(out).collect()}
     assert replies[11].startswith("2 ")  # root first (level order)
     assert set(replies[10].split()) == {"1", "4", "5"}
+    # The request frame was evaluated once, for all the jobs above.
+    assert evals.value == 2
+
+
+def test_run_requests_builds_only_requested_branches(spark):
+    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators.loopstats import (
+        LOOP_STATS,
+    )
+
+    edges = make_edges(spark, REF_G3, graph_id=3)
+    schema = "seq_no int, op_no int, graph_id int, start_vertex int"
+    reply_cols = [
+        ("seq_no", "int"), ("op_no", "int"), ("graph_id", "int"), ("vertex", "bigint"), ("level", "int"),
+    ]
+    cases = [
+        # DFS only: the leaves, and no BFS superstep.
+        ([(10, 3, 3, 3)], {10: "1 4 5"}),
+        # Writes only: the five reply columns, no rows.
+        ([(20, 1, 3, None), (21, 2, 3, None)], {}),
+    ]
+    for rows, golden in cases:
+        LOOP_STATS.clear()
+        out = run_requests(spark.createDataFrame(rows, schema), edges)
+        assert out.dtypes == reply_cols
+        assert {r["seq_no"]: r["reply"] for r in format_reply(out).collect()} == golden
+        assert "bfs_levels_multi" not in LOOP_STATS
 
 def test_graph_stats(spark):
     edges = make_edges(spark, REF_G3, graph_id=3).unionAll(

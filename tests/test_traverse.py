@@ -150,13 +150,14 @@ def test_bfs_levels_multi_skips_absent_start(spark):
 def test_dfs_leaves_multi_per_request_roots(spark):
     e = make_edges(spark, SIO_G2, graph_id=7)
     sources = spark.createDataFrame([(7, 1), (7, 5)], "graph_id int, start long")
-    got = {}
-    for r in dfs_leaves_multi(e, sources).collect():
-        got.setdefault(r["start"], set()).add(r["leaf"])
-    # Sample-IO G2: leaves rooted at 1 -> {3,5,6}; rooted at 5 -> {3,6,1}? no:
-    # degree-1 vertices are {3,5,6}; minus the root.
-    assert got[1] == {3, 5, 6}
-    assert got[5] == {3, 6}
+    # A duplicated edge row must not lift leaf 3 (neighbor 4) to degree 2.
+    for edges in (e, e.unionAll(make_edges(spark, [(3, 4)], graph_id=7))):
+        got = {}
+        for r in dfs_leaves_multi(edges, sources).collect():
+            got.setdefault(r["start"], set()).add(r["leaf"])
+        # Sample-IO G2: degree-1 vertices are {3,5,6}; minus the root.
+        assert got[1] == {3, 5, 6}
+        assert got[5] == {3, 6}
 
 
 def test_connected_components_forest(spark):
