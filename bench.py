@@ -20,11 +20,11 @@ exceeded the driver's 2000-char stdout tail):
 Each query is fully materialized (count of collected rows) so the
 timing covers the whole plan, not just planning.
 
-Timed runs are COLD with respect to every session memo:
-``entrymod.reset_session_caches()`` runs before each timed repetition
-(round-12 verdict #1 — previously the best-of-N min over memo-backed
-queries recorded a cache-hit read, e.g. q_pagerank at 0.046 s vs its
-real 7-12 s cost).
+Timed runs are COLD: a declared query's persists belong to that
+query and are released when the next one starts
+(``operators/persists.py``), so no run reads another run's build.
+``entrymod.reset_session_caches()`` runs that release before each
+timed repetition, so its block removal stays outside the timed window.
 """
 
 from __future__ import annotations
@@ -77,11 +77,9 @@ def main() -> None:
         runs: list[float] = []
         n = -1
         for i in range(3):
-            # De-game the timing (round-12 verdict #1): drop every
-            # session memo (result caches + persisted edge tables)
-            # before EACH timed run, so run 2+ rebuilds from the
-            # parquet scans exactly like run 1 and min() reflects the
-            # query's true cost, never a cache read.
+            # Release the previous run's persists here, blocking, so
+            # the query's own release at its start finds nothing and
+            # the block removal is not timed.
             entrymod.reset_session_caches()
             graphalgs.LOOP_STATS.clear()
             t0 = time.time()

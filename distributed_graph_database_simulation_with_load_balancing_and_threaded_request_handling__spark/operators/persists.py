@@ -1,32 +1,42 @@
-"""Release registry for operator-internal persisted DataFrames.
+"""Release registry for the persisted state a declared query leaves
+behind.
 
-The pair-finding operators (dedup/similarity/textops) persist a
-multi-consumer subtree (signature table, inverted index, gram table)
-that the RETURNED lazy DataFrame reads — an in-operator try/finally
-unpersist would drop the blocks before the caller's action ran, so
-those persists cannot be released at operator exit (unlike the loop
-persists in graphalgs, which are consumed inside the operator and ARE
-released in ``finally``).
+Persisted DataFrames and temporary tables outlive the call that made
+them: the edge-table constructors in ``sources.graphs`` and the
+pair-finding operators (dedup/similarity/textops) persist a subtree
+that the RETURNED lazy DataFrame reads, so an in-operator try/finally
+unpersist would drop the blocks before the caller's action ran (unlike
+the loop persists in graphalgs, which are consumed inside the operator
+and ARE released in ``finally``).
 
-Previously they relied solely on the ContextCleaner reclaiming blocks
-once the Python handles were garbage collected; in a long-lived
-session MEMORY_AND_DISK blocks from hundreds of operator calls can
-accumulate until GC happens to run (round-12 verdict #7).  This
-registry makes the release explicit: operators register each such
-persist via ``tracked_persist``, and harness boundaries — the bench's
-per-run cache reset, a serving loop between requests — call
-``release_operator_persists()`` once the previous result has been
-consumed.  The one-live-result contract matches the session caches:
-a caller holding a result across a release boundary re-executes from
-the (unpersisted) lineage, which is correct, just slower.
+Dropping the Python handle does not release them either: a
+``DataFrame.persist`` stays registered in Spark's CacheManager, and its
+RDD in ``getPersistentRDDs()``, after the handle is garbage collected
+and the JVM has run a GC — and while it stays there the CacheManager
+substitutes it into any later plan with the same result.  Only an
+explicit unpersist releases it.
+
+The rule: a declared query's persists belong to that query.  They are
+registered here (``tracked_persist``, ``on_release``) and released when
+the next declared query starts — ``__spark_entry__.queries()`` wraps
+every query to call ``release_operator_persists()`` first — or by
+``__spark_entry__.reset_session_caches()`` outside a timed window.  A
+caller holding a result across that boundary re-executes it from the
+(unpersisted) lineage, which is correct, just slower.  Whatever is
+still registered at interpreter exit is released by an ``atexit`` hook
+(temp directories outlive the JVM).
 """
 
 from __future__ import annotations
 
+import atexit
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-_LIVE: list[DataFrame] = []
+# Persisted DataFrames and release callbacks, newest last.
+_LIVE: list[DataFrame | Callable[[], object]] = []
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -38,17 +48,29 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return out
 
 
+def on_release(fn: Callable[[], object]) -> None:
+    """Run ``fn`` at the next ``release_operator_persists()`` sweep —
+    for state that is not a persist (a temporary table, its directory)."""
+    _LIVE.append(fn)
+
+
 def release_operator_persists() -> int:
-    """Unpersist every tracked block; returns how many were released.
-    BLOCKING: callers are harness boundaries (the bench's per-run
-    reset), and an async release would overlap the NEXT timed run with
-    block-removal work — the removal must finish outside the timed
-    region.  Safe to call with the session already stopped
+    """Unpersist every tracked block and run every release callback;
+    returns how many were released.  BLOCKING: an async release would
+    overlap the next query (or the next timed run) with block-removal
+    work.  Safe to call with the session already stopped
     (best-effort)."""
     n = len(_LIVE)
     while _LIVE:
+        item = _LIVE.pop()
         try:
-            _LIVE.pop().unpersist(blocking=True)
+            if isinstance(item, DataFrame):
+                item.unpersist(blocking=True)
+            else:
+                item()
         except Exception:
             pass  # session shutting down: blocks die with the executor
     return n
+
+
+atexit.register(release_operator_persists)

@@ -417,7 +417,7 @@ def bfs_level_order(
     boundaries are estimated from a sample, and the block column here
     feeds two plan branches (the local ranks and the counts) that must
     agree bit-for-bit even if the exchange is recomputed.  The id
-    bounds cost one O(1)-row action on the (session-cached) levels.
+    bounds cost one O(1)-row action on the (checkpointed) levels.
     Trade-off: heavily CLUSTERED vertex ids would unbalance blocks
     (bounded by |level| either way, never worse than the old plan);
     the ingest's dense ids make blocks near-uniform.

@@ -17,30 +17,6 @@ from .tables import load_table
 
 ROOT_VID = 999
 
-# Persisted-graph cache, keyed per Spark application + construction
-# args.  The reference keeps every graph resident in the secondary
-# servers' address space between requests (secondary_server.c:42
-# ``int graphs[10][N][N]``); the Spark rendering is a persisted edge
-# DataFrame shared by every traversal in the session (the GraphX
-# ``graph.cache()`` posture).  Testdata is immutable, so entries never
-# go stale; MEMORY_AND_DISK spills instead of OOMing at scale.
-_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def evict_edge_cache(
-    except_sf_dir: str | None = None, *, blocking: bool = False
-) -> None:
-    """Unpersist and drop every cached edge table whose sf_dir differs
-    from ``except_sf_dir`` (all of them when None).  Cache keys are
-    ``(applicationId, sf_dir, kind, ...)`` — sf_dir is index 1.  The
-    driver harness sweeps one sf_dir at a time, so a long-lived
-    session switching sf_dirs releases the previous scale's persisted
-    blocks instead of accumulating them.  ``blocking=True`` is for
-    harness boundaries (the bench's per-run reset), where async block
-    removal would overlap the next timed run."""
-    for key in [k for k in _EDGE_CACHE if except_sf_dir is None or k[1] != except_sf_dir]:
-        _EDGE_CACHE.pop(key).unpersist(blocking=blocking)
-
 
 def derived_tree_edges(
     spark: SparkSession,
@@ -48,7 +24,6 @@ def derived_tree_edges(
     *,
     symmetric: bool = True,
     graph_id: int = 1,
-    cached: bool = True,
 ) -> DataFrame:
     """Edge list of the derived tree over region/nation/customer.
 
@@ -57,14 +32,11 @@ def derived_tree_edges(
     engine stores — the reference stores symmetric adjacency matrices,
     G1.txt/G2.txt/G3.txt are all symmetric).
 
-    ``cached`` (default) persists the constructed edge list once per
-    session and returns the same DataFrame to every caller, so the
-    BFS/DFS/CC query family shares one materialization instead of
-    re-deriving the union-of-three-scans per query.
+    The edge list is persisted (``tracked_persist``), so the calling
+    query's consumers share one materialization of the
+    union-of-three-scans; it is released when the next declared query
+    starts.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, symmetric, graph_id)
-    if cached and key in _EDGE_CACHE:
-        return _EDGE_CACHE[key]
     region = load_table(spark, sf_dir, "region")
     nation = load_table(spark, sf_dir, "nation")
     customer = load_table(spark, sf_dir, "customer")
@@ -89,11 +61,12 @@ def derived_tree_edges(
     )
     if symmetric:
         e0 = e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    out = e0.select(F.lit(graph_id).cast("int").alias("graph_id"), "src", "dst")
-    if cached:
-        out = out.persist()
-        _EDGE_CACHE[key] = out
-    return out
+    # Local import: the operators package imports this module.
+    from ..operators.persists import tracked_persist
+
+    return tracked_persist(
+        e0.select(F.lit(graph_id).cast("int").alias("graph_id"), "src", "dst")
+    )
 
 def edges_from_pairs(pairs: DataFrame, *, graph_id: int = 1, symmetric: bool = True) -> DataFrame:
     """Normalize raw (src,dst) pairs into a canonical undirected edge
@@ -154,7 +127,6 @@ def copurchase_edges(
     max_basket: int | None = 12,
     symmetric: bool = False,
     ship_range: tuple[str, str] | None = None,
-    cached: bool = True,
 ) -> DataFrame:
     """Part co-occurrence graph from ``lineitem``: one canonical
     ``src < dst`` edge per distinct pair of parts appearing in the
@@ -190,18 +162,13 @@ def copurchase_edges(
     # Derived from the weighted build: the canonical pair set is
     # exactly the weighted aggregation's key set (groupBy keys ==
     # distinct), so the unweighted graph is a free projection over the
-    # ONE persisted base per (sf_dir, window) — the analytics suite
-    # (triangles/k-core/common-neighbors over the windowed graph,
-    # degree-hist over the full one) shares that base with the
-    # sssp/PageRank weighted consumers instead of re-scanning lineitem
-    # and re-shuffling the pair explosion per query family.
+    # persisted weighted base.
     w = copurchase_weighted_edges(
         spark,
         sf_dir,
         max_basket=max_basket,
         symmetric=symmetric,
         ship_range=ship_range,
-        cached=cached,
     )
     return w.select("src", "dst")
 
@@ -275,7 +242,6 @@ def copurchase_weighted_edges(
     max_basket: int | None = 12,
     symmetric: bool = False,
     ship_range: tuple[str, str] | None = None,
-    cached: bool = True,
 ) -> DataFrame:
     """Weighted co-purchase graph: ``(src, dst, cnt, w)`` per canonical
     part pair, where ``cnt`` is the number of orders containing both
@@ -287,28 +253,19 @@ def copurchase_weighted_edges(
     the dedup-distinct is replaced by a count aggregation (identical
     shuffle shape, the weight comes for free).
     """
-    # The persisted unit is the CANONICAL (src < dst) weighted base —
-    # one per (sf_dir, window, max_basket); the symmetric orientation
-    # is a shuffle-free union-of-projections over those same blocks,
-    # so symmetric and asymmetric consumers (and, via
-    # ``copurchase_edges``, unweighted ones) all share one build.
-    base_key = (
-        spark.sparkContext.applicationId, sf_dir, "copurchase_w", max_basket, ship_range,
-    )
-    if cached and base_key in _EDGE_CACHE:
-        weighted = _EDGE_CACHE[base_key]
-    else:
-        weighted = (
-            _copurchase_pair_rows(spark, sf_dir, max_basket, ship_range)
-            .groupBy("src", "dst")
-            .agg(F.count("*").alias("cnt"))
-            .select(
-                "src", "dst", "cnt", (1 + F.expr("100 div cnt")).cast("long").alias("w")
-            )
+    # The persisted unit is the CANONICAL (src < dst) weighted base;
+    # the symmetric orientation is a shuffle-free union-of-projections
+    # over those same blocks.
+    from ..operators.persists import tracked_persist
+
+    weighted = tracked_persist(
+        _copurchase_pair_rows(spark, sf_dir, max_basket, ship_range)
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("cnt"))
+        .select(
+            "src", "dst", "cnt", (1 + F.expr("100 div cnt")).cast("long").alias("w")
         )
-        if cached:
-            weighted = weighted.persist()
-            _EDGE_CACHE[base_key] = weighted
+    )
     if not symmetric:
         return weighted
     return weighted.unionAll(
@@ -323,7 +280,6 @@ def trade_digraph(
     sf_dir: str,
     *,
     top_k: int = 2,
-    cached: bool = True,
 ) -> DataFrame:
     """DIRECTED nation trade-flow graph: an edge ``a -> b`` when
     supplier-nation ``b`` is among customer-nation ``a``'s ``top_k``
@@ -338,9 +294,6 @@ def trade_digraph(
     |nations|^2 flow rows; the top-k window runs over those bounded
     rows, NOT the fact table.  Returns ``(src, dst)`` long columns.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, "trade_digraph", top_k)
-    if cached and key in _EDGE_CACHE:
-        return _EDGE_CACHE[key]
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_suppkey"
     )
@@ -364,7 +317,9 @@ def trade_digraph(
         )
         .agg(F.count("*").alias("cnt"))
     )
-    out = (
+    from ..operators.persists import tracked_persist
+
+    return tracked_persist(
         flows.withColumn(
             "_rk",
             F.row_number().over(
@@ -376,10 +331,6 @@ def trade_digraph(
         .where(F.col("_rk") <= int(top_k))
         .select("src", "dst")
     )
-    if cached:
-        out = out.persist()
-        _EDGE_CACHE[key] = out
-    return out
 
 
 def cobuyer_weighted_edges(
@@ -388,7 +339,6 @@ def cobuyer_weighted_edges(
     *,
     max_part_buyers: int = 25,
     symmetric: bool = False,
-    cached: bool = True,
 ) -> DataFrame:
     """The OTHER projection of the order-basket bipartite graph:
     customers connected when they bought the same part, weighted by
@@ -409,27 +359,20 @@ def cobuyer_weighted_edges(
     Returns canonical ``(src, dst, cnt)`` customer pairs
     (``symmetric=True`` unions both orientations, shuffle-free).
     """
-    base_key = (
-        spark.sparkContext.applicationId, sf_dir, "cobuyer_w", max_part_buyers,
-    )
-    if cached and base_key in _EDGE_CACHE:
-        weighted = _EDGE_CACHE[base_key]
-    else:
-        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        bought = li.join(
-            orders, li["l_orderkey"] == orders["o_orderkey"]
-        ).select("l_partkey", "o_custkey")
-        weighted = (
-            cooccurrence_pairs(
-                bought, "l_partkey", "o_custkey", max_group=max_part_buyers
-            )
-            .groupBy("src", "dst")
-            .agg(F.count("*").alias("cnt"))
+    from ..operators.persists import tracked_persist
+
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    bought = li.join(
+        orders, li["l_orderkey"] == orders["o_orderkey"]
+    ).select("l_partkey", "o_custkey")
+    weighted = tracked_persist(
+        cooccurrence_pairs(
+            bought, "l_partkey", "o_custkey", max_group=max_part_buyers
         )
-        if cached:
-            weighted = weighted.persist()
-            _EDGE_CACHE[base_key] = weighted
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("cnt"))
+    )
     if not symmetric:
         return weighted
     return weighted.unionAll(

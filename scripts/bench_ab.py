@@ -7,10 +7,12 @@ code trees mounted side by side (a read-only git worktree pins the
 r7 closing commit), and full bench passes ALTERNATED r7, r8, r7, r8
 so neither arm monopolizes the warm end of the boot.  Per query the
 arm's time is the min over its passes (the bench.py steady-state
-convention); each pass purges the package from sys.modules first, so
-per-session caches (_shared_result families) are rebuilt inside
-every pass — both arms pay their own protocol's build cost, exactly
-as a fresh official bench run would.
+convention).  Each pass purges the package from sys.modules first and
+calls the loaded tree's ``reset_session_caches()`` before each timed
+query, outside the timed window, as bench.py does — so no query reads
+what an earlier query of the pass persisted (session memos, edge
+tables, trained artifacts), and each arm pays its own build cost,
+exactly as a fresh official bench run would.
 
 Usage: python scripts/bench_ab.py [base_commit] [sf_dir] [passes_per_arm]
            [--queries q_a,q_b,...]
@@ -41,28 +43,33 @@ def _purge_modules() -> None:
         del sys.modules[name]
 
 
-def _load_queries(tree: str):
+def _load_entry(tree: str):
     _purge_modules()
     sys.path.insert(0, tree)
     try:
         import __spark_entry__ as entrymod  # noqa: PLC0415
 
         assert entrymod.__file__.startswith(tree), entrymod.__file__
-        return entrymod.queries()
+        return entrymod
     finally:
         sys.path.remove(tree)
 
 
 def _bench_pass(spark, tree: str, sf_dir: str, only: set | None = None) -> dict[str, float]:
-    qs = _load_queries(tree)
+    entrymod = _load_entry(tree)
+    qs = entrymod.queries()
     if only is not None:
         qs = {n: f for n, f in qs.items() if n in only}
     out: dict[str, float] = {}
     for name, fn in qs.items():
+        entrymod.reset_session_caches()
         t0 = time.time()
         fn(spark, sf_dir).count()
         out[name] = round(time.time() - t0, 3)
         gc.collect()
+    # The next pass loads a fresh copy of the modules: release this
+    # one's last query here, while its registry is still reachable.
+    entrymod.reset_session_caches()
     return out
 
 

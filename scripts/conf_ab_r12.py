@@ -1,7 +1,7 @@
 """Same-boot session-config A/B (round-12 optimization): ONE JVM /
 SparkSession, full bench passes ALTERNATED control vs candidate conf
-set, package modules purged between passes so session caches
-(_shared_result families) rebuild inside every pass — the bench_ab.py
+set, package modules purged between passes, and each declared query
+releasing the previous one's persists when it starts — the bench_ab.py
 protocol, but the two arms differ by runtime conf instead of by tree.
 
 Usage:

@@ -59,9 +59,7 @@ def main():
 
     # Skewed variant: no basket cap + the planted mega-bundle clique
     # over the 500 highest-degree parts.
-    uncapped = copurchase_edges(
-        spark, sf_dir, ship_range=SHIP_RANGE, max_basket=None, cached=False
-    )
+    uncapped = copurchase_edges(spark, sf_dir, ship_range=SHIP_RANGE, max_basket=None)
     deg = (
         base.select(F.col("src").alias("v"))
         .unionAll(base.select(F.col("dst").alias("v")))

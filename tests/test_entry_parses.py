@@ -163,61 +163,63 @@ def test_survey_inventory_lists_every_query():
     assert not missing, f"queries missing from SURVEY.md: {sorted(missing)}"
 
 
-def test_evict_other_sf_releases_previous_sweep():
-    """Session caches are keyed (applicationId, sf_dir); switching
-    sf_dir must drop AND unpersist the previous scale's entries
-    (round-3 ADVICE made this load-bearing for long driver sessions).
-    Sweep sf0.001 then sf0.01 and assert no sf0.001 cache entry — and
-    no lingering persisted edge table — survives the switch.
+def _persisted_rdd_ids(spark):
+    """Ids of the session's persisted RDDs, leaving out locally
+    checkpointed ones: their blocks are released by the ContextCleaner
+    once unreferenced, not by the persist registry."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(i) for i in rdds.keySet() if not rdds.get(i).rdd().isLocallyCheckpointed()
+    }
 
-    Runs against the process's active session (getOrCreate — in a
-    full-suite run this IS the shared conftest session, which mirrors
-    the long-lived driver session the eviction exists for; the caches
-    it sweeps are keyed by this applicationId either way)."""
+
+def test_next_query_releases_previous_query_persists():
+    """A declared query's persists belong to that query: once the next
+    declared query has run, nothing the previous one persisted is
+    still cached (its derived-tree edge table included), a published
+    bucketed table is dropped, and the temporary directories under a
+    result are removed."""
+    import glob
+    import tempfile
+
     import pytest
     from pyspark.sql import SparkSession
 
-    sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    if not (os.path.isdir(sf_a) and os.path.isdir(sf_b)):
+    sf = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf):
         pytest.skip("driver testdata not present")
-
-    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.sources import (
-        graphs,
-    )
 
     spark = SparkSession.builder.master("local[4]").getOrCreate()
     qs = entry.queries()
-    qs["q_bfs_levels"](spark, sf_a).count()
-    assert any(k[1] == sf_a for k in entry._TREE_LEVELS_CACHE)
-    edges_a = next(v for k, v in graphs._EDGE_CACHE.items() if k[1] == sf_a)
-    assert edges_a.storageLevel.useMemory  # persisted while current
+    entry.reset_session_caches()
+    before = _persisted_rdd_ids(spark)
+    qs["q_bfs_levels"](spark, sf).count()
+    from_a = _persisted_rdd_ids(spark) - before
+    assert from_a, "q_bfs_levels should persist its edge table"
+    qs["q_dfs_leaves"](spark, sf).count()
+    assert not from_a & _persisted_rdd_ids(spark)
 
-    qs["q_bfs_levels"](spark, sf_b).count()
-    all_caches = (
-        entry._TREE_LEVELS_CACHE,
-        entry._RECALL_PAIRS_CACHE,
-        entry._PAGERANK_GRAPH_CACHE,
-        entry._KMEANS_CACHE,
-        entry._COMMUNITIES_CACHE,
-        entry._APPROX_RESULT_CACHE,
-        graphs._EDGE_CACHE,
-    )
-    stale = [k for cache in all_caches for k in cache if k[1] == sf_a]
-    assert not stale, f"sf0.001 cache entries survived the sf switch: {stale}"
-    # The previous scale's persisted edge table must be UNPERSISTED
-    # (storage level NONE), not merely dropped from the dict — that is
-    # what actually releases executor memory.  (The BFS loop's
-    # localCheckpoint blocks are released asynchronously by the
-    # ContextCleaner once the popped references die; persisted tables
-    # are the synchronous, assertable part.)
-    assert not edges_a.storageLevel.useMemory
-    assert not edges_a.storageLevel.useDisk
+    def tables():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("docs_bucketed_")}
+
+    def dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "sparkgraft_*")))
+
+    for query in ("q_bucketed_table", "q_csv_io"):
+        tables_0, dirs_0 = tables(), dirs()
+        qs[query](spark, sf).count()
+        new_tables, new_dirs = tables() - tables_0, dirs() - dirs_0
+        assert new_dirs and (new_tables or query == "q_csv_io")
+        qs["q_dfs_leaves"](spark, sf).count()
+        assert not new_tables & tables()
+        assert not new_dirs & dirs()
 
 
-def test_evict_other_sf_drops_bucketed_table_and_dir():
-    """Round-5 advice: bucketed-table cache entries must be fully
-    reclaimed on sf switch — DROP TABLE (metastore) AND rmtree (the
-    mkdtemp parquet dir), not just popped from the dict."""
+def test_evict_other_sf_releases_previous_sweep():
+    """Switching sf_dir in a long-lived session leaves nothing of the
+    previous scale's sweep persisted: once a query has run at sf0.01,
+    no RDD persisted by the sf0.001 run (its derived-tree edge table
+    included) is still cached."""
     import pytest
     from pyspark.sql import SparkSession
 
@@ -226,23 +228,55 @@ def test_evict_other_sf_drops_bucketed_table_and_dir():
         pytest.skip("driver testdata not present")
 
     spark = SparkSession.builder.master("local[4]").getOrCreate()
+    qs = entry.queries()
+    entry.reset_session_caches()
+    before = _persisted_rdd_ids(spark)
+    qs["q_bfs_levels"](spark, sf_a).count()
+    from_a = _persisted_rdd_ids(spark) - before
+    assert from_a, "q_bfs_levels should persist its edge table"
+
+    qs["q_bfs_levels"](spark, sf_b).count()
+    stale = from_a & _persisted_rdd_ids(spark)
+    assert not stale, f"sf0.001 persists survived the sf switch: {stale}"
+
+
+def test_evict_other_sf_drops_bucketed_table_and_dir():
+    """A bucketed table published at one scale is fully reclaimed when
+    the next scale runs: DROP TABLE (metastore) AND the removal of its
+    temporary parquet directory, not just a forgotten handle."""
+    import glob
+    import tempfile
+
+    import pytest
+    from pyspark.sql import SparkSession
+
+    sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
+    if not (os.path.isdir(sf_a) and os.path.isdir(sf_b)):
+        pytest.skip("driver testdata not present")
+
+    def tables():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("docs_bucketed_")}
+
+    def dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "sparkgraft_*")))
+
+    spark = SparkSession.builder.master("local[4]").getOrCreate()
+    tables_0, dirs_0 = tables(), dirs()
     entry.queries()["q_bucketed_table"](spark, sf_a).count()
-    key_a = next(k for k in entry._BUCKETED_TABLE_CACHE if k[1] == sf_a)
-    name_a, dir_a = entry._BUCKETED_TABLE_CACHE[key_a]
-    assert spark.catalog.tableExists(name_a)
-    assert os.path.isdir(dir_a)
+    tables_a, dirs_a = tables() - tables_0, dirs() - dirs_0
+    assert tables_a and dirs_a
+    assert all(spark.catalog.tableExists(t) for t in tables_a)
 
     entry.queries()["q_bucketed_table"](spark, sf_b).count()
-    assert not any(k[1] == sf_a for k in entry._BUCKETED_TABLE_CACHE)
-    assert not spark.catalog.tableExists(name_a)
-    assert not os.path.isdir(dir_a)
+    assert not any(spark.catalog.tableExists(t) for t in tables_a)
+    assert not any(os.path.isdir(d) for d in dirs_a)
+    entry.reset_session_caches()
 
 
 def test_reset_session_caches_clears_every_memo():
-    """Round-12 verdict #1 (gaming): bench best-of-N timing must not
-    see session memos — reset_session_caches() must empty all nine
-    entry-level caches AND the persisted edge tables, unpersisting
-    DataFrames so executor memory is actually released."""
+    """Outside a declared query's start (the bench between timed runs),
+    reset_session_caches() releases everything the last query
+    persisted: Spark's CacheManager is left empty."""
     import pytest
     from pyspark.sql import SparkSession
 
@@ -250,34 +284,14 @@ def test_reset_session_caches_clears_every_memo():
     if not os.path.isdir(sf_a):
         pytest.skip("driver testdata not present")
 
-    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.sources import (
-        graphs,
-    )
-
     spark = SparkSession.builder.master("local[4]").getOrCreate()
-    qs = entry.queries()
-    qs["q_bfs_levels"](spark, sf_a).count()
-    assert entry._TREE_LEVELS_CACHE and graphs._EDGE_CACHE
-    edges = next(iter(graphs._EDGE_CACHE.values()))
+    spark.catalog.clearCache()  # what earlier tests left persisted
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    entry.queries()["q_bfs_levels"](spark, sf_a).count()
+    assert not cache_manager.isEmpty()
 
     entry.reset_session_caches()
-    for cache in entry._SESSION_CACHES:
-        assert not cache, f"cache survived reset: {cache}"
-    assert not graphs._EDGE_CACHE
-    assert not edges.storageLevel.useMemory
-    assert not edges.storageLevel.useDisk
-
-
-def test_reset_session_caches_purges_ann_artifact_store(tmp_path, monkeypatch):
-    """The trained-artifact store is a CROSS-RUN disk memo keyed on the
-    testdata fingerprint — the de-gamed bench must retrain, not load
-    round N-1's training from disk."""
-    store = tmp_path / "ann_cache"
-    store.mkdir()
-    (store / "pq_books_deadbeef.json").write_text("{}")
-    monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE", str(store))
-    entry.reset_session_caches()
-    assert not store.exists()
+    assert cache_manager.isEmpty()
 
 
 def test_bench_times_cold_runs_and_writes_per_cpus_full_map():

@@ -444,8 +444,7 @@ def test_copurchase_shipdate_pushdown_and_single_scan(spark):
     )
 
     e = copurchase_edges(
-        spark, "/root/testdata/sf0.001",
-        ship_range=("1995-01-01", "1996-01-01"), cached=False,
+        spark, "/root/testdata/sf0.001", ship_range=("1995-01-01", "1996-01-01")
     )
     plan = e._jdf.queryExecution().executedPlan().toString()
     # The ship-date range must reach the parquet scan as a data filter...
