@@ -135,6 +135,7 @@ from distributed_graph_database_simulation_with_load_balancing_and_threaded_requ
     on_release,
     release_operator_persists,
     tracked_persist,
+    tracked_tmpdir,
 )
 from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators.dedup import (
     cross_source_duplicates,
@@ -1029,17 +1030,6 @@ def reset_session_caches() -> None:
     so the previous query's block removal stays outside the timed
     window."""
     release_operator_persists()
-
-
-def _query_tmpdir(prefix: str) -> str:
-    """A temporary directory under a declared query's result; it is
-    removed when the next declared query starts."""
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=prefix)
-    on_release(lambda: shutil.rmtree(path, ignore_errors=True))
-    return path
 
 
 def _sql_planes_values() -> str:
@@ -2998,7 +2988,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pairs = [(1, 2), (2, 3), (2, 4), (2, 5)]  # G3 star, center 2
         rows = [(3, u, v) for u, v in pairs] + [(3, v, u) for u, v in pairs]
         edges = spark.createDataFrame(rows, "graph_id int, src long, dst long")
-        d = _query_tmpdir("gdb_matrix_")
+        d = tracked_tmpdir("gdb_matrix_")
         path = os.path.join(d, "G3.txt")
         write_adjacency_text(edges, path)
         return read_adjacency_text(spark, path, graph_id=3)
@@ -3675,7 +3665,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         nation = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
-        path = _query_tmpdir("sparkgraft_csv_") + "/nation"
+        path = tracked_tmpdir("sparkgraft_csv_") + "/nation"
         write_csv(nation, path)
         back = read_csv(
             spark, path, "n_nationkey long, n_name string, n_regionkey long"
@@ -3698,7 +3688,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         supplier = load_table(spark, sf_dir, "supplier").select(
             "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
         )
-        path = _query_tmpdir("sparkgraft_orc_") + "/supplier"
+        path = tracked_tmpdir("sparkgraft_orc_") + "/supplier"
         write_orc(supplier, path)
         back = read_orc(
             spark, path,
@@ -3721,7 +3711,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-        path = _query_tmpdir("sparkgraft_jsonl_") + "/docs"
+        path = tracked_tmpdir("sparkgraft_jsonl_") + "/docs"
         write_jsonl(docs, path)
         back = read_jsonl(spark, path, "doc_id long, lang string, text string")
         return back.groupBy("lang").agg(
@@ -3752,7 +3742,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         name = f"docs_bucketed_{uuid.uuid4().hex[:8]}"
         # External table: DROP leaves the parquet files to the
         # directory's own removal.
-        base_dir = _query_tmpdir("sparkgraft_bucket_")
+        base_dir = tracked_tmpdir("sparkgraft_bucket_")
         on_release(lambda: spark.sql(f"DROP TABLE IF EXISTS {name}"))
         (
             docs.write.option("path", base_dir + "/docs")
@@ -3779,7 +3769,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # recomputes from the source with an explicit NULL projection,
         # so the hash match proves the merge is lossless and typed.
         nation = load_table(spark, sf_dir, "nation")
-        path = _query_tmpdir("sparkgraft_evolve_") + "/t"
+        path = tracked_tmpdir("sparkgraft_evolve_") + "/t"
         v1 = nation.where(F.col("n_nationkey") % 2 == 0).select(
             F.col("n_nationkey").cast("long").alias("n_nationkey"), "n_name"
         )

@@ -98,42 +98,65 @@ def schedule_requests(
         )
     )
 
-def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = True) -> DataFrame:
-    """Batch dispatch: execute every read request (ops 3/4) in one
-    declarative plan, returning ``(seq_no, op_no, graph_id, vertex,
-    level)`` — BFS rows carry their hop distance, DFS-leaf rows carry
-    level NULL.
+# Largest (edge rows x read requests) of one graph that
+# ``run_requests`` answers in one task (``serve_graphs_whole``); above
+# it the graph's requests take the superstep loop.  Measured on a
+# 4-core VM, Spark 4.1.2, local[2], one random graph of average degree
+# 8 (few levels: the loop's best case) read from partitioned parquet,
+# T BFS requests, CPU seconds of the whole process tree, whole vs loop:
+#   1e5 rows x 1: 2.5 vs 4.5 s    1e5 x 8: 2.7 vs 6.7 s
+#   3e5 rows x 1: 2.3 vs 7.3 s    3e5 x 8: 3.5 vs 10.3 s
+#   1e6 rows x 1: 4.8 vs 15.7 s   1e6 x 8: 8.2 vs 28.4 s
+# (wall 3.4 vs 8.1 s and 7.2 vs 14.0 s at 1e6 rows).  The whole path
+# cost less at every size measured; the bound is the largest measured
+# product, so one graph's edge list held in one Python worker stays
+# within what was run.
+WHOLE_GRAPH_BOUND = 8_000_000
 
-    This is the engine's analogue of the server loop: instead of one
-    pthread per request (primary_server.c:235-238), all requests of a
-    kind become ONE set-oriented job: every op-4 request rides a single
-    multi-source BFS (one frontier loop for the whole batch, supersteps
-    = the deepest traversal requested), and every op-3 request shares
-    one degree aggregation (planner rule R1) when ``assume_tree``, or
-    one multi-source BFS orientation + child-detection join
-    (``dfs_leaves_multi_general``) otherwise — both paths are
-    request-count-independent with no driver-side per-request loop.
-    Distinct (graph, start) pairs are traversed once and fanned back
-    out to their seq_nos by join.  Requests whose start vertex is
-    absent from the graph produce no rows (the reference reads
+
+def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = True) -> DataFrame:
+    """Batch dispatch: execute every read request (ops 3/4) of a batch,
+    returning ``(seq_no, op_no, graph_id, vertex, level)`` — BFS rows
+    carry their hop distance, DFS-leaf rows carry level NULL.
+
+    This is the engine's analogue of the server loop.  The batch is
+    read by ONE action before any operator runs: it materializes the
+    projected read requests into a lazy local checkpoint, so no later
+    job re-runs the caller's request plan (a scheduling window, a
+    Python-built frame), and returns, per requested graph, its number
+    of read requests, its edge rows and the op kinds asked of it.  A
+    batch without read requests returns the five columns with no rows.
+
+    Each requested graph then takes one of two paths:
+
+    * **Whole graph** (edge rows x read requests at most
+      ``WHOLE_GRAPH_BOUND``): every such graph is answered in ONE
+      grouped pass, ``traverse.serve_graphs_whole`` — one cogroup Arrow
+      UDF that loads each graph into one task and runs a plain BFS and
+      the DFS leaf rule there, as the reference's secondary server
+      does.  No superstep loop runs; the Spark work is the pass's two
+      grouping shuffles.
+    * **Superstep loop** (larger graphs): every op-4 request rides a
+      single multi-source BFS (one frontier loop for all of them,
+      supersteps = the deepest traversal requested), and every op-3
+      request shares one degree aggregation (planner rule R1) when
+      ``assume_tree``, or one multi-source BFS orientation +
+      child-detection join (``dfs_leaves_multi_general``) otherwise.
+      Only the branches the large graphs' op kinds need are built.
+
+    A mixed batch unions both; the rows are the same whichever path a
+    graph takes (for symmetric edge lists, the engine's canonical
+    form).  Requests whose start vertex is absent from the graph, or
+    whose graph_id is NULL, produce no rows (the reference reads
     out-of-bounds memory there, SURVEY.md §2.1; single-source
     ``bfs_levels`` offers the hard-error variant).
-
-    The batch is read by ONE action before any operator runs: it
-    materializes the projected read requests into a lazy local
-    checkpoint, so no later job re-runs the caller's request plan (a
-    scheduling window, a Python-built frame), and returns the op kinds
-    present.  Only the branches those kinds need are built: a DFS-only
-    batch runs no BFS superstep, a BFS-only batch no degree
-    aggregation, and a batch without read requests returns the five
-    columns with no rows.
 
     Without a ``graph_id`` request column the whole edge set is
     treated as one graph (the output's graph_id is NULL), matching the
     name-keyed request shape of the reference client.
     """
     from ..plans.planner import plan_request
-    from .traverse import bfs_levels_multi, dfs_leaves_multi, dfs_leaves_multi_general
+    from .traverse import bfs_levels_multi, dfs_leaves_multi, dfs_leaves_multi_general, serve_graphs_whole
 
     dfs_plan = plan_request(3, assume_tree=assume_tree)
     has_gid = "graph_id" in requests.columns
@@ -157,8 +180,33 @@ def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = T
         .localCheckpoint(eager=False)
     )
     # The batch's one read action: materializes the checkpoint and
-    # names the branches to build.
-    kinds = {r["op_no"] for r in reads.select("op_no").distinct().collect()}
+    # sizes every requested graph.  NULL graph ids match no edge.
+    graphs = (
+        reads.where(F.col("graph_id").isNotNull())
+        .groupBy("graph_id")
+        .agg(F.count("*").alias("n_reads"), F.collect_set("op_no").alias("ops"))
+        .join(e.groupBy("graph_id").agg(F.count("*").alias("n_edges")), "graph_id", "left")
+        .collect()
+    )
+    whole, looped, kinds = [], [], set()
+    for g in graphs:
+        if (g["n_edges"] or 0) * g["n_reads"] <= WHOLE_GRAPH_BOUND:
+            whole.append(g["graph_id"])
+        else:
+            looped.append(g["graph_id"])
+            kinds.update(g["ops"])
+
+    outs = []
+    if whole:
+        rows = serve_graphs_whole(
+            e.where(F.col("graph_id").isin(whole)),
+            reads.where(F.col("graph_id").isin(whole)),
+            tree_leaves=dfs_plan.rule == "R1",
+        )
+        outs.append(rows.select("seq_no", "op_no", out_gid.alias("graph_id"), "vertex", "level"))
+    if looped:
+        e = e.where(F.col("graph_id").isin(looped))
+        reads = reads.where(F.col("graph_id").isin(looped))
 
     # The requests side of each fan-out join is CONTROL-PLANE sized
     # (bounded by client count — the reference's msgq depth), while the
@@ -167,7 +215,6 @@ def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = T
     # 2 SortMergeJoin, 4 Exchange), i.e. the BFS/leaf output was
     # shuffled by (graph_id, start) just to be stamped with seq_nos.
     # Broadcasting the requests makes the stamp exchange-free.
-    outs = []
     if 4 in kinds:
         op4 = reads.where(F.col("op_no") == 4)
         bfs = bfs_levels_multi(e, op4.select("graph_id", "start"))
@@ -201,9 +248,9 @@ def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = T
         )
 
     if not outs:
-        # No read request: ``reads`` is empty, so this is the empty
-        # five-column reply frame, typed like the branches above.
-        return reads.select(
+        # No read request of a graph: the empty five-column reply
+        # frame, typed like the branches above.
+        return reads.limit(0).select(
             "seq_no",
             "op_no",
             out_gid.alias("graph_id"),
@@ -211,6 +258,7 @@ def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = T
             F.lit(None).cast("int").alias("level"),
         )
     return reduce(DataFrame.unionByName, outs)
+
 
 def format_reply(result: DataFrame) -> DataFrame:
     """O12 compat: space-joined vertex list per request in (level,

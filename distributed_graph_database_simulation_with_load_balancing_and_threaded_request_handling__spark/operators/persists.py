@@ -30,6 +30,8 @@ still registered at interpreter exit is released by an ``atexit`` hook
 from __future__ import annotations
 
 import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -52,6 +54,14 @@ def on_release(fn: Callable[[], object]) -> None:
     """Run ``fn`` at the next ``release_operator_persists()`` sweep —
     for state that is not a persist (a temporary table, its directory)."""
     _LIVE.append(fn)
+
+
+def tracked_tmpdir(prefix: str) -> str:
+    """A new temporary directory, removed at the next
+    ``release_operator_persists()`` sweep or at interpreter exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    on_release(lambda: shutil.rmtree(path, ignore_errors=True))
+    return path
 
 
 def release_operator_persists() -> int:

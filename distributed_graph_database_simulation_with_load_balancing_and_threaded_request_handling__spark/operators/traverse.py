@@ -299,6 +299,84 @@ def bfs_levels_multi(
         e.unpersist(blocking=False)
 
 
+def serve_graphs_whole(edges: DataFrame, reads: DataFrame, *, tree_leaves: bool = True) -> DataFrame:
+    """Answer read requests one WHOLE graph per task — the reference's
+    secondary server, which loads a graph into memory and traverses it
+    there (``parallel_bfs`` / ``parallel_dfs``, secondary_server.c:94-140,
+    185-213).  One cogroup Arrow UDF over (edges by graph_id, requests
+    by graph_id) runs, per graph, a plain queue BFS for op 4, and for
+    op 3 the tree leaf rule R1 (``tree_leaves``: degree-1 vertices minus
+    the start, as ``dfs_leaves_multi``) or the BFS-tree rule R2 (reached
+    vertices with no neighbor one level deeper, as
+    ``dfs_leaves_multi_general``).
+
+    ``edges``: (graph_id, src, dst), symmetric per graph; ``reads``:
+    (seq_no, op_no, graph_id, start).  Returns (seq_no, op_no, graph_id,
+    vertex, level) with level NULL on op-3 rows — the rows the
+    superstep branches of ``dispatch.run_requests`` return, with no
+    superstep loop: the Spark work is the two grouping shuffles, and
+    a graph's whole edge list must fit one Python worker (the caller
+    bounds it, ``dispatch.WHOLE_GRAPH_BOUND``).  Starts absent from
+    their graph, NULL graph ids and graph ids without edges yield no
+    rows."""
+    import pyarrow as pa
+
+    schema = pa.schema(
+        [("seq_no", pa.int32()), ("op_no", pa.int32()), ("graph_id", pa.int32()),
+         ("vertex", pa.int64()), ("level", pa.int32())]
+    )
+
+    def serve(e: pa.Table, r: pa.Table) -> pa.Table:
+        adj: dict[int, set[int]] = {}
+        for s, d in zip(e.column("src").to_pylist(), e.column("dst").to_pylist()):
+            adj.setdefault(s, set()).add(d)
+        deg1 = {v for v, ns in adj.items() if len(ns) == 1}
+        levels_by_start: dict[int, dict[int, int]] = {}
+
+        def levels(start: int) -> dict[int, int]:
+            if start not in levels_by_start:
+                lv, frontier = {start: 0}, [start]
+                while frontier:
+                    nxt = []
+                    for v in frontier:
+                        for w in adj.get(v, ()):
+                            if w not in lv:
+                                lv[w] = lv[v] + 1
+                                nxt.append(w)
+                    frontier = nxt
+                levels_by_start[start] = lv
+            return levels_by_start[start]
+
+        cols: dict[str, list] = {name: [] for name in schema.names}
+        rows = zip(*(r.column(c).to_pylist() for c in ("seq_no", "op_no", "graph_id", "start")))
+        for seq, op, gid, start in rows:
+            if gid is None or start not in adj:
+                continue
+            if op == 4:
+                found = levels(start).items()
+            elif tree_leaves:
+                found = ((v, None) for v in deg1 if v != start)
+            else:
+                lv = levels(start)
+                found = (
+                    (v, None) for v, k in lv.items()
+                    if v != start and not any(lv.get(w) == k + 1 for w in adj.get(v, ()))
+                )
+            for v, k in found:
+                for name, x in zip(schema.names, (seq, op, gid, v, k)):
+                    cols[name].append(x)
+        return pa.table(cols, schema=schema)
+
+    e = edges.select(
+        F.col("graph_id").cast("int").alias("graph_id"),
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
+    )
+    return e.groupBy("graph_id").cogroup(reads.groupBy("graph_id")).applyInArrow(
+        serve, "seq_no int, op_no int, graph_id int, vertex long, level int"
+    )
+
+
 def dfs_leaves_multi(edges: DataFrame, sources: DataFrame) -> DataFrame:
     """Batched tree DFS-leaves (planner rule R1 applied set-wise): for
     every (graph_id, start) request at once, the leaf set is the
@@ -514,10 +592,10 @@ def dfs_leaves(
             + (f" {graph_id}" if graph_id is not None else "")
         )
     if assume_tree:
-        deg = e.groupBy("src").agg(F.count_distinct("dst").alias("degree"))
-        return (
-            deg.where((F.col("degree") == 1) & (F.col("src") != int(start_vertex)))
-            .select(F.col("src").alias("leaf"))
+        # Degree 1 as in ``dfs_leaves_multi``: one hash aggregation.
+        deg1 = e.groupBy("src").agg((F.min("dst") == F.max("dst")).alias("deg1"))
+        return deg1.where(F.col("deg1") & (F.col("src") != int(start_vertex))).select(
+            F.col("src").alias("leaf")
         )
     # One-source call of the batched general path (graph_id 0 over the
     # already-filtered edges); it returns no rows for an absent start,

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.textfns import token_count
+from ..operators.persists import tracked_tmpdir
 
 # The documents-table columns (FIXTURES.md) plus the arrival timestamp
 # a stream needs for watermarks/windows.
@@ -382,7 +383,8 @@ def run_attribution_batch(spark: SparkSession, path: str) -> DataFrame:
 # path -> staged dir, per process: mkdtemp gives a mode-0700 dir owned
 # by THIS process, so a shared /tmp can never pre-seed the stream
 # source with foreign files (or deny us the dir) the way a predictable
-# world-shared name could.
+# world-shared name could.  ``tracked_tmpdir`` removes it at the next
+# release sweep (the next call re-stages it) or at process exit.
 _STAGED_SOURCE_DIRS: dict[str, str] = {}
 
 
@@ -392,14 +394,13 @@ def _stream_source_dir(path: str) -> str:
     stage a directory of symlinks to the same bytes — the exact
     "files land in a watched directory" production shape."""
     import os
-    import tempfile
 
     path = os.path.abspath(path)  # a relative target would dangle from /tmp
     if os.path.isdir(path):
         return path
     src_dir = _STAGED_SOURCE_DIRS.get(path)
     if src_dir is None or not os.path.isdir(src_dir):
-        src_dir = tempfile.mkdtemp(prefix="stream_src_")
+        src_dir = tracked_tmpdir("stream_src_")
         os.symlink(path, os.path.join(src_dir, os.path.basename(path)))
         _STAGED_SOURCE_DIRS[path] = src_dir
     return src_dir
@@ -574,7 +575,8 @@ EDGE_STREAM_SCHEMA = StructType(
 # Completed edge-ingest drives' base dirs, reaped at the start of the
 # next drive (the serve_requests_available_now supersession pattern:
 # the returned DataFrame reads its memory table eagerly here, but the
-# staged queue files still accumulate without this).
+# staged queue files still accumulate without this); the last one is
+# removed by ``tracked_tmpdir`` at the next release sweep or at exit.
 _EDGE_INGEST_DIRS: list[str] = []
 
 
@@ -615,11 +617,10 @@ def run_edge_ingest_batch(
     import os
     import re
     import shutil
-    import tempfile
 
     while _EDGE_INGEST_DIRS:
         shutil.rmtree(_EDGE_INGEST_DIRS.pop(), ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="edge_ingest_")
+    base = tracked_tmpdir("edge_ingest_")
     _EDGE_INGEST_DIRS.append(base)
     qdir = os.path.join(base, "queue")
     (
@@ -748,7 +749,9 @@ def run_hdr_hist_batch(spark: SparkSession, path: str) -> DataFrame:
 # Base dirs of completed spend-upsert drives, reaped at the start of
 # the next drive (the _EDGE_INGEST_DIRS pattern — the returned
 # DataFrame reads the final version lazily, so the PREVIOUS drive's
-# tree can only be deleted once a new drive supersedes it).
+# tree can only be deleted once a new drive supersedes it); the last
+# one is removed by ``tracked_tmpdir`` at the next release sweep or at
+# exit.
 _UPSERT_DIRS: list[str] = []
 
 
@@ -795,11 +798,10 @@ def run_spend_upsert_batch(
     """
     import os
     import shutil
-    import tempfile
 
     while _UPSERT_DIRS:
         shutil.rmtree(_UPSERT_DIRS.pop(), ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="stream_upsert_")
+    base = tracked_tmpdir("stream_upsert_")
     _UPSERT_DIRS.append(base)
     qdir = os.path.join(base, "queue")
     (

@@ -26,11 +26,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampType
 
 from ..operators.dispatch import route_expr, run_requests, schedule_requests
+from ..operators.persists import tracked_tmpdir
 from ..sources.schema import REQUESTS_SCHEMA
 
 # Base dirs of completed serve_requests_available_now drives, reaped
 # at the START of the next drive (the returned DataFrame reads its
-# replies parquet lazily, so cleanup must wait until supersession).
+# replies parquet lazily, so cleanup must wait until supersession),
+# or by ``tracked_tmpdir`` at the next release sweep or process exit.
 _SERVE_BASE_DIRS: list[str] = []
 
 # The request message plus an arrival timestamp (the msgsnd instant —
@@ -133,16 +135,17 @@ def serve_requests_available_now(
     equivalence the declared ``q_stream_requests`` puts under the
     value oracle.
 
-    Scale posture: a cycle's work is at most one multi-source BFS + one
-    degree aggregation for ALL its requests (request-count-independent;
-    a cycle builds only the branches its op kinds need), and
-    the accumulated sink is an append-only parquet directory — the
-    same "replies land in a results table" shape a long-running
-    cluster deployment would use.
+    Scale posture: a cycle's work is ``run_requests``' — one grouped
+    pass that answers every request on a graph under
+    ``dispatch.WHOLE_GRAPH_BOUND`` one graph per task, and for larger
+    graphs at most one multi-source BFS + one degree aggregation for
+    ALL their requests (a cycle builds only the branches its op kinds
+    need) — and the accumulated sink is an append-only parquet
+    directory — the same "replies land in a results table" shape a
+    long-running cluster deployment would use.
     """
     import os
     import shutil
-    import tempfile
 
     # Reap the PREVIOUS drives' reply dirs first: each returned
     # DataFrame reads its parquet lazily, so a base dir can only be
@@ -154,7 +157,7 @@ def serve_requests_available_now(
     # session-scoped caches already impose.
     while _SERVE_BASE_DIRS:
         shutil.rmtree(_SERVE_BASE_DIRS.pop(), ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="req_serve_")
+    base = tracked_tmpdir("req_serve_")
     _SERVE_BASE_DIRS.append(base)
     in_dir, out_dir = os.path.join(base, "queue"), os.path.join(base, "replies")
     ts = F.lit(None).cast("timestamp")

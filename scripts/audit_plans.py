@@ -44,9 +44,16 @@ def audit(name: str, plan: str) -> dict:
         # NO scan's list is empty.
         "pushed": "PushedFilters:[" in plan.replace(" ", "")
         and "PushedFilters:[]" not in plan.replace(" ", ""),
-        "arrow": ("MapInPandas" in plan)
-        or ("ArrowEvalPython" in plan)
-        or ("FlatMapGroupsInPandas" in plan),
+        "arrow": any(
+            node in plan
+            for node in (
+                "MapInPandas",
+                "ArrowEvalPython",
+                "FlatMapGroupsInPandas",
+                "FlatMapCoGroupsInPandas",
+                "FlatMapCoGroupsInArrow",
+            )
+        ),
         "BAD_cartesian": "CartesianProduct" in plan,
         "BAD_row_udf": "BatchEvalPython" in plan,
     }

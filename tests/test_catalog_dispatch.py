@@ -149,6 +149,85 @@ def test_run_requests_builds_only_requested_branches(spark):
         assert {r["seq_no"]: r["reply"] for r in format_reply(out).collect()} == golden
         assert "bfs_levels_multi" not in LOOP_STATS
 
+def _random_batch(rng):
+    """Four graphs in one symmetric edge list: a random tree, a tree
+    plus random extra edges (cycles, maybe a self-loop), a tree whose
+    rows are all duplicated and two disjoint paths; and a read batch
+    over them with absent starts (99), a NULL graph_id and a write."""
+    edges, vertices = [], {}
+
+    def tree(n):
+        return [(v, rng.randint(1, v - 1)) for v in range(2, n + 1)]
+
+    def add(gid, pairs, copies=1):
+        for u, v in pairs:
+            edges.extend([(gid, u, v), (gid, v, u)] * copies)
+        vertices[gid] = sorted({x for p in pairs for x in p})
+
+    n = rng.randint(4, 12)
+    add(1, tree(n))
+    add(2, tree(n) + [(rng.randint(1, n), rng.randint(1, n)) for _ in range(3)])
+    add(3, tree(n), copies=2)
+    add(4, [(1, 2), (2, 3), (5, 6), (6, 7)])
+    reqs = []
+    for seq in range(1, 17):
+        gid = rng.randint(1, 4)
+        reqs.append((seq, rng.choice((3, 4)), gid, rng.choice(vertices[gid] + [99])))
+    reqs += [(17, 4, None, 1), (18, 1, 1, None)]
+    return edges, reqs
+
+
+def test_run_requests_whole_graph_path_equals_loop(spark, monkeypatch):
+    """Every graph answered in one task (bound above every graph) and
+    every graph answered by the superstep loops (bound 0) give the same
+    rows: random trees, cycles, duplicate rows, absent starts, NULL
+    graph_id, with and without a graph_id column, R1 and R2."""
+    import random
+
+    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators import (
+        dispatch,
+    )
+
+    schema = "seq_no int, op_no int, graph_id int, start_vertex int"
+    for seed in (0, 1):
+        edges, reqs = _random_batch(random.Random(seed))
+        edges = spark.createDataFrame(edges, "graph_id int, src long, dst long")
+        batch = spark.createDataFrame(reqs, schema)
+        one_graph = (
+            batch.where(F.col("graph_id").isNull() | (F.col("graph_id") == 2)).drop("graph_id"),
+            edges.where(F.col("graph_id") == 2),
+        )
+        for requests, e in ((batch, edges), one_graph):
+            for assume_tree in (True, False):
+                got = {}
+                for bound in (10**9, 0):
+                    monkeypatch.setattr(dispatch, "WHOLE_GRAPH_BOUND", bound)
+                    out = run_requests(requests, e, assume_tree=assume_tree)
+                    got[bound] = (out.dtypes, sorted(out.collect(), key=str))
+                assert got[10**9] == got[0], (seed, requests.columns, assume_tree)
+                assert got[0][1], "the batch should reach some vertices"
+
+
+def test_run_requests_bound_selects_the_path(spark, monkeypatch):
+    """The bound is edge rows x read requests of one graph: 8 rows x 1
+    request stays under 10 and runs no superstep loop; 8 x 2 goes over
+    and takes the multi-source BFS loop."""
+    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators import (
+        dispatch,
+    )
+    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators.loopstats import (
+        LOOP_STATS,
+    )
+
+    monkeypatch.setattr(dispatch, "WHOLE_GRAPH_BOUND", 10)
+    edges = make_edges(spark, REF_G3, graph_id=3)
+    schema = "seq_no int, op_no int, graph_id int, start_vertex int"
+    for rows, looped in (([(1, 4, 3, 2)], False), ([(1, 4, 3, 2), (2, 4, 3, 1)], True)):
+        LOOP_STATS.clear()
+        out = run_requests(spark.createDataFrame(rows, schema), edges)
+        assert {r["vertex"] for r in out.where("seq_no = 1").collect()} == {1, 2, 3, 4, 5}
+        assert ("bfs_levels_multi" in LOOP_STATS) == looped
+
 def test_graph_stats(spark):
     edges = make_edges(spark, REF_G3, graph_id=3).unionAll(
         make_edges(spark, REF_G1, graph_id=1)

@@ -568,3 +568,41 @@ def test_run_dedup_batch_digest_set_equals_batch_keepers(spark, tmp_path):
     batch = {r["text_hash"] for r in exact_dedup(docs).select("text_hash").collect()}
     assert streamed == batch
     assert len(streamed) == 3
+
+
+def test_stream_temp_dirs_removed_at_release_and_exit(spark, tmp_path):
+    """The streaming drivers' temporary directories: the next call
+    still reaps the previous drive's, the release sweep removes the
+    last one, and a process that ends removes what it staged."""
+    import subprocess
+    import sys
+
+    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.operators import (
+        persists,
+    )
+    from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark.streaming import (
+        ingest,
+    )
+
+    src = tmp_path / "t.json"
+    src.write_text("{}\n")
+    code = (
+        "from distributed_graph_database_simulation_with_load_balancing_and_threaded_request_handling__spark"
+        ".streaming.ingest import _stream_source_dir\n"
+        "import os\n"
+        f"d = _stream_source_dir({str(src)!r})\n"
+        "print(os.path.isdir(d), d)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True)
+    existed, staged = out.stdout.split()
+    assert existed == "True" and not os.path.exists(staged)
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    assert ingest.run_edge_ingest_batch(spark, pairs).count() == 4
+    first = ingest._EDGE_INGEST_DIRS[-1]
+    ingest.run_edge_ingest_batch(spark, pairs).count()
+    last = ingest._EDGE_INGEST_DIRS[-1]
+    assert not os.path.exists(first) and os.path.isdir(last)
+    persists.release_operator_persists()
+    assert not os.path.exists(last)
