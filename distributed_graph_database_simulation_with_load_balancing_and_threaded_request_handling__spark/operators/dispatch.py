@@ -98,20 +98,22 @@ def schedule_requests(
         )
     )
 
+
 # Largest (edge rows x read requests) of one graph that
 # ``run_requests`` answers in one task (``serve_graphs_whole``); above
-# it the graph's requests take the superstep loop.  Measured on a
-# 4-core VM, Spark 4.1.2, local[2], one random graph of average degree
-# 8 (few levels: the loop's best case) read from partitioned parquet,
-# T BFS requests, CPU seconds of the whole process tree, whole vs loop:
-#   1e5 rows x 1: 2.5 vs 4.5 s    1e5 x 8: 2.7 vs 6.7 s
-#   3e5 rows x 1: 2.3 vs 7.3 s    3e5 x 8: 3.5 vs 10.3 s
-#   1e6 rows x 1: 4.8 vs 15.7 s   1e6 x 8: 8.2 vs 28.4 s
-# (wall 3.4 vs 8.1 s and 7.2 vs 14.0 s at 1e6 rows).  The whole path
-# cost less at every size measured; the bound is the largest measured
-# product, so one graph's edge list held in one Python worker stays
-# within what was run.
-WHOLE_GRAPH_BOUND = 8_000_000
+# it the graph's requests take the superstep loop.  CPU seconds of the
+# process tree, whole vs loop (4-core VM, Spark 4.1.2, local[2], one
+# random graph of average degree 8 read from parquet, T BFS requests,
+# best of 2 repetitions):
+#   1e4 rows x 1: 1.4 vs 4.3 s    1e4 x 512: 2.2 vs 13.6 s
+#   1e5 x 8:      2.7 vs 6.7 s    1e5 x 256: 9.9 vs 56.1 s
+#   1e6 x 1:      4.8 vs 15.7 s   1e6 x 8:   8.2 vs 28.4 s
+# No CPU crossover up to 3e7: the bound comes from memory instead, as
+# one task holds the whole graph.  Peak RSS of ``_serve_graph`` alone
+# over its input tables: 1e6 x 1 +166 MB, 2e6 x 1 +347 MB, 4e6 x 1
+# +689 MB, 2.5e5 x 8 +88 MB, 1e5 x 20 +64 MB.  One request is the
+# costliest shape per unit, so the bound keeps any graph under ~350 MB.
+WHOLE_GRAPH_BOUND = 2_000_000
 
 
 def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = True) -> DataFrame:
@@ -180,17 +182,22 @@ def run_requests(requests: DataFrame, edges: DataFrame, *, assume_tree: bool = T
         .localCheckpoint(eager=False)
     )
     # The batch's one read action: materializes the checkpoint and
-    # sizes every requested graph.  NULL graph ids match no edge.
+    # sizes every requested graph.  The broadcast join keeps only the
+    # requested graphs' edge rows before they are counted; a graph
+    # without edge rows (or a NULL graph id) drops out here, as it has
+    # no reply rows on either path.
+    requested = reads.groupBy("graph_id").agg(
+        F.count("*").alias("n_reads"), F.collect_set("op_no").alias("ops")
+    )
     graphs = (
-        reads.where(F.col("graph_id").isNotNull())
+        e.join(F.broadcast(requested), "graph_id")
         .groupBy("graph_id")
-        .agg(F.count("*").alias("n_reads"), F.collect_set("op_no").alias("ops"))
-        .join(e.groupBy("graph_id").agg(F.count("*").alias("n_edges")), "graph_id", "left")
+        .agg(F.count("*").alias("n_edges"), F.first("n_reads").alias("n_reads"), F.first("ops").alias("ops"))
         .collect()
     )
     whole, looped, kinds = [], [], set()
     for g in graphs:
-        if (g["n_edges"] or 0) * g["n_reads"] <= WHOLE_GRAPH_BOUND:
+        if g["n_edges"] * g["n_reads"] <= WHOLE_GRAPH_BOUND:
             whole.append(g["graph_id"])
         else:
             looped.append(g["graph_id"])

@@ -319,61 +319,64 @@ def serve_graphs_whole(edges: DataFrame, reads: DataFrame, *, tree_leaves: bool 
     bounds it, ``dispatch.WHOLE_GRAPH_BOUND``).  Starts absent from
     their graph, NULL graph ids and graph ids without edges yield no
     rows."""
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [("seq_no", pa.int32()), ("op_no", pa.int32()), ("graph_id", pa.int32()),
-         ("vertex", pa.int64()), ("level", pa.int32())]
-    )
-
-    def serve(e: pa.Table, r: pa.Table) -> pa.Table:
-        adj: dict[int, set[int]] = {}
-        for s, d in zip(e.column("src").to_pylist(), e.column("dst").to_pylist()):
-            adj.setdefault(s, set()).add(d)
-        deg1 = {v for v, ns in adj.items() if len(ns) == 1}
-        levels_by_start: dict[int, dict[int, int]] = {}
-
-        def levels(start: int) -> dict[int, int]:
-            if start not in levels_by_start:
-                lv, frontier = {start: 0}, [start]
-                while frontier:
-                    nxt = []
-                    for v in frontier:
-                        for w in adj.get(v, ()):
-                            if w not in lv:
-                                lv[w] = lv[v] + 1
-                                nxt.append(w)
-                    frontier = nxt
-                levels_by_start[start] = lv
-            return levels_by_start[start]
-
-        cols: dict[str, list] = {name: [] for name in schema.names}
-        rows = zip(*(r.column(c).to_pylist() for c in ("seq_no", "op_no", "graph_id", "start")))
-        for seq, op, gid, start in rows:
-            if gid is None or start not in adj:
-                continue
-            if op == 4:
-                found = levels(start).items()
-            elif tree_leaves:
-                found = ((v, None) for v in deg1 if v != start)
-            else:
-                lv = levels(start)
-                found = (
-                    (v, None) for v, k in lv.items()
-                    if v != start and not any(lv.get(w) == k + 1 for w in adj.get(v, ()))
-                )
-            for v, k in found:
-                for name, x in zip(schema.names, (seq, op, gid, v, k)):
-                    cols[name].append(x)
-        return pa.table(cols, schema=schema)
-
     e = edges.select(
         F.col("graph_id").cast("int").alias("graph_id"),
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
     )
     return e.groupBy("graph_id").cogroup(reads.groupBy("graph_id")).applyInArrow(
-        serve, "seq_no int, op_no int, graph_id int, vertex long, level int"
+        lambda e, r: _serve_graph(e, r, tree_leaves),
+        "seq_no int, op_no int, graph_id int, vertex long, level int",
+    )
+
+
+def _serve_graph(e, r, tree_leaves: bool):
+    """One graph of ``serve_graphs_whole``: its edge rows ``e`` (src,
+    dst) and read requests ``r`` (seq_no, op_no, graph_id, start), both
+    Arrow tables, to the reply rows as an Arrow table."""
+    import pyarrow as pa
+
+    adj: dict[int, set[int]] = {}
+    for s, d in zip(e.column("src").to_pylist(), e.column("dst").to_pylist()):
+        adj.setdefault(s, set()).add(d)
+    deg1 = {v for v, ns in adj.items() if len(ns) == 1}
+    levels_by_start: dict[int, dict[int, int]] = {}
+
+    def levels(start: int) -> dict[int, int]:
+        if start not in levels_by_start:
+            lv, frontier = {start: 0}, [start]
+            while frontier:
+                nxt = []
+                for v in frontier:
+                    for w in adj.get(v, ()):
+                        if w not in lv:
+                            lv[w] = lv[v] + 1
+                            nxt.append(w)
+                frontier = nxt
+            levels_by_start[start] = lv
+        return levels_by_start[start]
+
+    out = []
+    reads = zip(*(r.column(c).to_pylist() for c in ("seq_no", "op_no", "graph_id", "start")))
+    for seq, op, gid, start in reads:
+        if gid is None or start not in adj:
+            continue
+        if op == 4:
+            out.extend((seq, op, gid, v, k) for v, k in levels(start).items())
+        elif tree_leaves:
+            out.extend((seq, op, gid, v, None) for v in deg1 if v != start)
+        else:
+            lv = levels(start)
+            out.extend(
+                (seq, op, gid, v, None)
+                for v, k in lv.items()
+                if v != start and not any(lv.get(w) == k + 1 for w in adj.get(v, ()))
+            )
+    types = (pa.int32(), pa.int32(), pa.int32(), pa.int64(), pa.int32())
+    cols = list(zip(*out)) or [()] * len(types)
+    return pa.table(
+        [pa.array(c, t) for c, t in zip(cols, types)],
+        names=["seq_no", "op_no", "graph_id", "vertex", "level"],
     )
 
 
