@@ -110,9 +110,10 @@ def schedule_requests(
 #   1e6 x 1:      4.8 vs 15.7 s   1e6 x 8:   8.2 vs 28.4 s
 # No CPU crossover up to 3e7: the bound comes from memory instead, as
 # one task holds the whole graph.  Peak RSS of ``_serve_graph`` alone
-# over its input tables: 1e6 x 1 +166 MB, 2e6 x 1 +347 MB, 4e6 x 1
-# +689 MB, 2.5e5 x 8 +88 MB, 1e5 x 20 +64 MB.  One request is the
-# costliest shape per unit, so the bound keeps any graph under ~350 MB.
+# over its input tables: 1e6 x 1 +163 MB, 1e6 x 8 +235 MB, 2e6 x 1
+# +342 MB, 2.5e5 x 8 +57 MB, 1e5 x 20 +25 MB.  The graph costs more
+# than the reply rows, so one request is the costliest shape per unit,
+# and the bound keeps any graph under ~350 MB.
 WHOLE_GRAPH_BOUND = 2_000_000
 
 

@@ -333,47 +333,53 @@ def serve_graphs_whole(edges: DataFrame, reads: DataFrame, *, tree_leaves: bool 
 def _serve_graph(e, r, tree_leaves: bool):
     """One graph of ``serve_graphs_whole``: its edge rows ``e`` (src,
     dst) and read requests ``r`` (seq_no, op_no, graph_id, start), both
-    Arrow tables, to the reply rows as an Arrow table."""
+    Arrow tables, to the reply rows as an Arrow table.
+
+    The requests are taken start by start, so one start's level map is
+    alive at a time, and the reply is held as five column lists that
+    share the map's vertex objects, not as row tuples."""
     import pyarrow as pa
 
     adj: dict[int, set[int]] = {}
     for s, d in zip(e.column("src").to_pylist(), e.column("dst").to_pylist()):
         adj.setdefault(s, set()).add(d)
-    deg1 = {v for v, ns in adj.items() if len(ns) == 1}
-    levels_by_start: dict[int, dict[int, int]] = {}
+    deg1 = [v for v, ns in adj.items() if len(ns) == 1]
 
-    def levels(start: int) -> dict[int, int]:
-        if start not in levels_by_start:
-            lv, frontier = {start: 0}, [start]
-            while frontier:
-                nxt = []
-                for v in frontier:
-                    for w in adj.get(v, ()):
-                        if w not in lv:
-                            lv[w] = lv[v] + 1
-                            nxt.append(w)
-                frontier = nxt
-            levels_by_start[start] = lv
-        return levels_by_start[start]
-
-    out = []
+    by_start: dict[int, list[tuple[int, int, int]]] = {}
     reads = zip(*(r.column(c).to_pylist() for c in ("seq_no", "op_no", "graph_id", "start")))
     for seq, op, gid, start in reads:
-        if gid is None or start not in adj:
-            continue
-        if op == 4:
-            out.extend((seq, op, gid, v, k) for v, k in levels(start).items())
-        elif tree_leaves:
-            out.extend((seq, op, gid, v, None) for v in deg1 if v != start)
+        if gid is not None and start in adj:
+            by_start.setdefault(start, []).append((seq, op, gid))
+
+    seqs, ops, gids, vertex, level = cols = ([], [], [], [], [])
+    for start, reqs in by_start.items():
+        lv, frontier = {start: 0}, [start]
+        # R1 reads degrees only; a traversal serves op 4 and rule R2.
+        if tree_leaves and all(op == 3 for _, op, _ in reqs):
+            frontier = []
+        while frontier:
+            nxt = []
+            for v in frontier:
+                for w in adj.get(v, ()):
+                    if w not in lv:
+                        lv[w] = lv[v] + 1
+                        nxt.append(w)
+            frontier = nxt
+        if tree_leaves:
+            leaves = [v for v in deg1 if v != start]
         else:
-            lv = levels(start)
-            out.extend(
-                (seq, op, gid, v, None)
-                for v, k in lv.items()
+            leaves = [
+                v for v, k in lv.items()
                 if v != start and not any(lv.get(w) == k + 1 for w in adj.get(v, ()))
-            )
+            ]
+        for seq, op, gid in reqs:
+            vs = lv if op == 4 else leaves
+            seqs += [seq] * len(vs)
+            ops += [op] * len(vs)
+            gids += [gid] * len(vs)
+            vertex += vs
+            level += lv.values() if op == 4 else [None] * len(vs)
     types = (pa.int32(), pa.int32(), pa.int32(), pa.int64(), pa.int32())
-    cols = list(zip(*out)) or [()] * len(types)
     return pa.table(
         [pa.array(c, t) for c, t in zip(cols, types)],
         names=["seq_no", "op_no", "graph_id", "vertex", "level"],
